@@ -79,8 +79,12 @@ object Bench {
     // scaling run overwrote the round-13 32-core per-query record
     // (VERDICT r13 #2) — the committed artifact is keyed to the default
     // core count; scaling runs keep their map in /tmp.
+    val full = only.isEmpty && Engine.cpus == Engine.defaultCpus
+    if (!full) System.err.println("[bench] BENCH_full_latest.json not " +
+      s"refreshed: filtered run or ${Engine.cpus} cores (record is " +
+      s"${Engine.defaultCpus}-core)")
     val sinks =
-      if (only.isEmpty && Engine.cpus == "32")
+      if (full)
         Seq("/tmp/graft_bench.json", "/root/repo/BENCH_full_latest.json")
       else Seq("/tmp/graft_bench.json")
     sinks

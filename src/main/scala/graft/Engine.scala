@@ -14,8 +14,12 @@ import org.apache.spark.sql.functions._
   * (AQE coalesce/skew handling on, shuffle parallelism = cores locally, UTC).
   */
 object Engine {
+  /** the core count of the committed bench record (Bench refreshes its
+    * repo artifact only at this count) */
+  val defaultCpus = "32"
+
   /** local parallelism: match cores, not Spark's default 200 shuffle partitions */
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
 
   def session(appName: String = "graft"): SparkSession = {
     val spark = configure(
@@ -42,70 +46,6 @@ object Engine {
     // reader rejects; read as raw long nanos and normalize in Tables.
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-
-  /** One shared small-fixture session profile for the verbatim-corpus
-    * sessions (TPC-H / TPC-DS / SSB fixture sessions — previously three
-    * duplicated string-configs, VERDICT r12 #6).
-    *
-    * Rationale (one place, session-scoped): a materialized micro-schema
-    * whose largest fact is under [[smallFactRows]] runs 22-103 sub-second
-    * queries where 32-way shuffles are pure task-scheduling floor — 8
-    * partitions cut per-query stage-launch overhead without moving any
-    * value (every fixture sum is exact under any accumulation order by
-    * design). Above the threshold (the scaled verbatim runs,
-    * [[graft.tools.TpchScaleBench]]) the floor would SERIALIZE real work
-    * onto a quarter of the cores, so the session keeps the engine-wide
-    * cores-wide default. At deploy scale the partition count is a
-    * deploy-time conf, not a plan property — plan signatures normalize it
-    * away. (The battery replay's 4-partition conf is a different surface:
-    * serial statement replay, tuned separately — ecd5a91.) */
-  val smallFactRows = 2000000L
-
-  def tuneFixtureSession(spark: SparkSession, largestFactRows: Long): Unit = {
-    if (largestFactRows < smallFactRows)
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // Join strategy (guide §3.1/§9), gated by the SAME fact-size threshold
-    // as the partition floor (VERDICT r13 #1): r13 applied
-    // preferSortMergeJoin=false to every fixture session unconditionally,
-    // and the committed driver run showed the tpcds_verbatim family +4.5 s.
-    // A 32-core fresh-JVM A/B this round (min-of-2 per side, both orders)
-    // measured the flip NET-NEGATIVE at micro-fixture scale on all three
-    // corpora — TPC-DS 31.5 vs 29.2 s, TPC-H+SSB 14.0 vs 12.6 s (geomean
-    // ratio 1.08/1.10): micro-scale joins mostly broadcast, and where a
-    // shuffle survives, the SHJ build adds planning/AQE-rewrite overhead
-    // without a sort worth skipping. ABOVE the threshold (the scaled
-    // verbatim runs, TpchScaleBench x30/x100) shuffled-hash is measured to
-    // win big — q9 5.9→2.0 s at x30, section 26.2→18.4 s — because the
-    // fact⋈fact joins otherwise pay two full sorts. The OOM risk SMJ
-    // hedges against stays bounded: the static pick still requires the
-    // planner's size conditions, and the AQE threshold only rewrites when
-    // EVERY post-shuffle partition fits the memory-derived per-task build
-    // budget. GRAFT_PREFER_SHJ=false restores the SMJ default (A/B knob).
-    if (largestFactRows >= smallFactRows &&
-        sys.env.getOrElse("GRAFT_PREFER_SHJ", "true").toBoolean) {
-      spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-      spark.conf.set(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        shjLocalMapThreshold(Runtime.getRuntime.maxMemory,
-          spark.sparkContext.defaultParallelism).toString)
-    }
-  }
-
-  /** AQE SHJ rewrite threshold derived from the memory envelope (VERDICT
-    * r13 #7, guide §5): the r13 constant 64m OOM'd at an 8 GB heap with 32
-    * concurrent builds ("Can't acquire 67108864 bytes") — 32×64 MB of hash
-    * relations plus probe/sort buffers exceed the 0.6-fraction execution
-    * pool. Budget: execution pool ≈ heap × memory.fraction (0.6); one
-    * concurrent task per core; a build may take at most a quarter of its
-    * task's share (hash relation overhead ≈2× raw bytes, plus headroom for
-    * the probe side and concurrent non-join operators). Clamped to
-    * [16 MB, 256 MB]: below 16 MB the rewrite isn't worth the bookkeeping
-    * (broadcast usually wins there anyway), above 256 MB per-partition
-    * builds stop being the cheap case SHJ targets. */
-  def shjLocalMapThreshold(heapBytes: Long, cores: Int): Long = {
-    val perBuild = (heapBytes * 0.6).toLong / math.max(cores, 1) / 4
-    math.max(16L << 20, math.min(256L << 20, perBuild))
-  }
 }
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md / FIXTURES.md).
@@ -123,16 +63,23 @@ object Tables {
   // schema + file listing once (metastore), not per query. Re-running
   // spark.read.parquet per query re-reads footers and re-lists files — at
   // ~10 tables × ~100 queries that fixed cost dominates small-SF benches and
-  // is pure waste at any scale. Keyed by session identity so concurrent
-  // sessions (tests) stay isolated.
-  private val dfCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String), DataFrame]()
-  private val viewsFor =
-    new java.util.concurrent.ConcurrentHashMap[Int, String]()
+  // is pure waste at any scale. Keyed by the session object (SparkSession
+  // has identity equality) so concurrent sessions (tests) stay isolated.
+  private final class Catalog {
+    val frames =
+      new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+    /** the dir whose tables are registered as temp views, if any */
+    val views = new java.util.concurrent.atomic.AtomicReference[String]()
+  }
+
+  private val catalogs =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, Catalog]()
+
+  private def catalog(spark: SparkSession): Catalog =
+    catalogs.computeIfAbsent(spark, _ => new Catalog)
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    dfCache.computeIfAbsent(
-      (System.identityHashCode(spark), dir, name),
+    catalog(spark).frames.computeIfAbsent((dir, name),
       _ => load(spark, dir, name))
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -197,7 +144,8 @@ object Tables {
   /** `keys` override: when the first downstream operation groups by a
     * known key, spreading BY THAT KEY lets the exchange double as the
     * operation's own shuffle (no second exchange); default is the table's
-    * natural key. The partition count is deliberately left to AQE
+    * natural key, and a table without one (region, nation) passes through.
+    * The partition count is deliberately left to AQE
     * (`parallelismFirst` coalescing): measured at sf0.1, forcing
     * `defaultParallelism` partitions pays more per-task floor than the
     * extra parallelism earns — AQE's size-derived pick is the
@@ -205,48 +153,15 @@ object Tables {
   def spread(spark: SparkSession, dir: String, name: String,
       keys: String*): DataFrame = {
     val df = apply(spark, dir, name)
-    if (rowGroupCount(spark, s"$dir/$name.parquet") >=
+    val ks = if (keys.nonEmpty) keys else spreadKeys.getOrElse(name, Nil)
+    if (ks.isEmpty || rowGroupCount(spark, s"$dir/$name.parquet") >=
         spark.sparkContext.defaultParallelism) df
-    else {
-      val ks = if (keys.nonEmpty) keys else spreadKeys(name)
-      df.repartition(ks.map(df.col): _*)
-    }
+    else df.repartition(ks.map(df.col): _*)
   }
 
   /** Register every table as a temp view so SQL-text queries can run.
     * Idempotent per (session, dir): re-registers only when the dir changes. */
-  def registerAll(spark: SparkSession, dir: String): Unit = {
-    val id = System.identityHashCode(spark)
-    if (viewsFor.put(id, dir) != dir)
+  def registerAll(spark: SparkSession, dir: String): Unit =
+    if (catalog(spark).views.getAndSet(dir) != dir)
       names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
-  }
-
-  /** A derived session whose views are registered through [[spread]] —
-    * the routing target for SQL-text rows whose heavy work is FUSED INTO
-    * the scan (partial aggregation, window staging over a single table):
-    * at the degenerate single-row-group fixture layout those rows run the
-    * fused work ~single-threaded, and the spread exchange parallelizes it.
-    * Registering spread views GLOBALLY was measured net-negative (32c A/B:
-    * the 147-row main-session SQL basket 80.3 vs 57.6 s) because
-    * broadcast-join rows pay a new full exchange of the fact side for
-    * nothing — so only rows where a per-row A/B shows a win route here
-    * (QueryDef.sqlSpread). At production layouts (row groups >= cores)
-    * spread is the identity, the views degenerate to the plain ones, and
-    * the routing is a no-op. Cached per (outer session, dir) like the
-    * verbatim fixture sessions. */
-  private val spreadSessions =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), SparkSession]()
-
-  def spreadSession(outer: SparkSession, dir: String): SparkSession =
-    spreadSessions.computeIfAbsent(
-      (System.identityHashCode(outer), dir), _ => {
-        val s = outer.newSession()
-        names.foreach { n =>
-          val df =
-            if (spreadKeys.contains(n)) spread(s, dir, n)
-            else apply(s, dir, n)
-          df.createOrReplaceTempView(n)
-        }
-        s
-      })
 }

@@ -37,22 +37,18 @@ object QueryDef {
   def sqlSame(name: String, q: String): QueryDef = sql(name, q, q)
 
   /** Same-text SQL routed through the spread-view session
-    * ([[Tables.spreadSession]]): identical rows — spread is a repartition
+    * ([[Sessions.spread]]): identical rows — spread is a repartition
     * of the same data — but the scan-fused heavy work (partial
     * aggregation, pre-window staging) parallelizes past the degenerate
     * single-row-group fixture layout. Reserved for rows where a measured
-    * A/B shows the extra exchange wins; GRAFT_SPREAD_ROUTE=0 falls back
-    * to the plain session (A/B knob). */
+    * A/B shows the extra exchange wins. */
   def sqlSpread(name: String, q: String): QueryDef = sqlSpread(name, q, q)
 
   /** spread-routed variant of [[sql]] (distinct DuckDB text). */
   def sqlSpread(name: String, sparkSql: String, duckSql: String): QueryDef =
     QueryDef(
       name,
-      (spark, dir) =>
-        if (sys.env.get("GRAFT_SPREAD_ROUTE").contains("0")) {
-          Tables.registerAll(spark, dir); spark.sql(sparkSql)
-        } else Tables.spreadSession(spark, dir).sql(sparkSql),
+      (spark, dir) => Sessions.spread(spark, dir).sql(sparkSql),
       Some(duckSql))
 }
 

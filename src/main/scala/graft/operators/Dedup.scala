@@ -526,13 +526,11 @@ object Dedup {
     // hashpartitioning(src), so every round's edges⋈labels join reuses the
     // layout instead of re-shuffling the static edge list O(log d) times —
     // at scale the edge list is the big side of every round.
-    val edges0 = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    // Measured on a 2M-node graph: 15.25 vs 18.25 s, 33% fewer shuffle
+    // bytes (OPTIMIZATION_r14.md).
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    // GRAFT_CC_PREPART=0 skips the pre-partition (A/B knob for
-    // tools.CcProbe, which carries the committed scale evidence)
-    val edges =
-      (if (sys.env.get("GRAFT_CC_PREPART").contains("0")) edges0
-       else edges0.repartition(col("src")))
+      .repartition(col("src"))
       .persist()
     var labels = nodes.select(col("doc"), col("doc").as("label"))
       .localCheckpoint()

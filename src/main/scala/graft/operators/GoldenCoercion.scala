@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.io.Source
 
-import graft.QueryDef
+import graft.{QueryDef, Sessions}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -247,12 +247,7 @@ object GoldenCoercion {
     * (tc, resolved type, stringified cells); results assemble into one
     * local frame for the comparator. */
   private def runMatrix(outer: SparkSession, base: String): DataFrame = {
-    // isolated session per battery — fresh-session-per-file semantics,
-    // no temp-view/SET leakage either way (see GoldenPg.runMatrix)
-    val spark = outer.newSession()
-    // reference-harness conf: 4 shuffle partitions (see
-    // GoldenPg.runMatrix for the sizing rationale)
-    spark.conf.set("spark.sql.shuffle.partitions", 4)
+    val spark = Sessions.battery(outer)
     val (width, stmts) = loadAll(base)
     val rows = withConfRestore(spark) {
       collectMatrix(spark, width, stmts) { s =>

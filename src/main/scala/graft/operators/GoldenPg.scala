@@ -3,7 +3,7 @@ package graft.operators
 import scala.collection.mutable
 import scala.io.Source
 
-import graft.QueryDef
+import graft.{QueryDef, Sessions}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
@@ -218,8 +218,8 @@ object GoldenPg {
     * bundled PostgreSQL regression data, resources/pgdata/) and Spark's
     * generated testdata/arraydata/mapdata. */
   // parsed once per JVM; the DataFrames are rebuilt per SESSION (battery
-  // replays run in isolated newSession()s, and a DataFrame registers temp
-  // views only in the session that built it)
+  // replays run in isolated Sessions.battery sessions, and a DataFrame
+  // registers temp views only in the session that built it)
   private lazy val onekRowsCached = rowsOf("/pgdata/onek.data", onekSchema)
   private lazy val tenkRowsCached = rowsOf("/pgdata/tenk.data", onekSchema)
   private lazy val aggRowsCached = rowsOf("/pgdata/agg.data",
@@ -303,20 +303,7 @@ object GoldenPg {
     * prefix) */
   private[operators] def runMatrix(outer: SparkSession,
       resourceBase: String): DataFrame = {
-    // ISOLATED session per battery (the reference harness runs each file
-    // in a fresh one): temp views, functions, SETs and the current
-    // database can neither leak in from the surrounding registry run nor
-    // leak out of this battery. The shared SparkContext and the external
-    // catalog are untouched.
-    val spark = outer.newSession()
-    // mirror the reference harness's SQLQueryTestSuite conf: 4 shuffle
-    // partitions. Battery fixtures are ≤10k rows; at the engine default
-    // (32) the per-statement task constant dominates replay wall time
-    // (pg_union: 66 tiny set-op statements, each with exchanges).
-    // Physical-only knob — every pinned value is partitioning-invariant.
-    // (AQE stays ON: measured, disabling it doubles the batched
-    // mega-union replay — stage coalescing earns its overhead here.)
-    spark.conf.set("spark.sql.shuffle.partitions", 4)
+    val spark = Sessions.battery(outer)
     registerFixtures(spark)
     val cat = new PgCatalog
     val (width, stmts) = GoldenCoercion.loadAll(resourceBase)

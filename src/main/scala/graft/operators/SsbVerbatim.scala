@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.io.Source
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sessions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** VERBATIM Star-Schema-Benchmark query texts (reference corpus:
@@ -198,6 +198,10 @@ object SsbVerbatim {
 
   private val baseTables = Seq("orders", "lineitem")
 
+  /** the denormalized star, lineorder its fact, with CBO join reordering */
+  val corpus: Sessions.Corpus = Sessions.Corpus("ssbv", baseTables,
+    fixtures, "lineorder", joinReorder = true)
+
   val queryNames: Seq[String] = Seq("1.1", "1.2", "1.3", "2.1", "2.2",
     "2.3", "3.1", "3.2", "3.3", "3.4", "4.1", "4.2", "4.3")
 
@@ -221,54 +225,8 @@ object SsbVerbatim {
     s"${nullOrder}WITH ${prefix.mkString(",\n")}\n${queryText(q).trim}"
   }
 
-  private val fixtureSessions = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String), SparkSession]
-
-  /** Isolated session over the MATERIALIZED, ANALYZE-cataloged star —
-    * same mechanics as [[TpchVerbatim.fixtureSession]]. */
-  def fixtureSession(outer: SparkSession, dir: String): SparkSession =
-    fixtureSessions.getOrElseUpdate((outer.sparkContext, dir), {
-      val spark = outer.newSession()
-      Tables.registerAll(spark, dir)
-      baseTables.foreach(t =>
-        spark.table(t).createOrReplaceTempView(s"tpch_$t"))
-      val version = java.util.UUID.nameUUIDFromBytes(
-        (dir + fixtures.map(_._2).mkString(""))
-          .getBytes("UTF-8")).toString.replace("-", "").take(16)
-      val root = new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"graft_ssbv_fixture_$version")
-      val done = new java.io.File(root, "_ALL_DONE")
-      if (!done.exists()) {
-        fixtures.foreach { case (n, sql) =>
-          spark.sql(sql).write.mode("overwrite")
-            .parquet(new java.io.File(root, n).getPath)
-        }
-        done.createNewFile()
-      }
-      (Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings") ++
-        baseTables.map("tpch_" + _))
-        .foreach(v => spark.catalog.dropTempView(v))
-      val db = s"graft_ssbv_$version"
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-      spark.catalog.setCurrentDatabase(db)
-      fixtures.foreach { case (n, _) =>
-        val path = new java.io.File(root, n).getPath
-        spark.sql(
-          s"CREATE TABLE IF NOT EXISTS `$n` USING parquet LOCATION '$path'")
-        spark.sql(s"ANALYZE TABLE `$n` COMPUTE STATISTICS FOR ALL COLUMNS")
-      }
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled",
-        sys.env.getOrElse("GRAFT_JOIN_REORDER", "true"))
-      // shared small-fixture profile (rationale at Engine.tuneFixtureSession)
-      graft.Engine.tuneFixtureSession(spark,
-        spark.table("lineorder").count())
-      spark
-    })
-
   def run(outer: SparkSession, dir: String, q: String): DataFrame =
-    fixtureSession(outer, dir).sql(queryText(q))
+    Sessions.fixture(outer, dir, corpus).sql(queryText(q))
 
   def queryFor(q: String): QueryDef = QueryDef(
     s"q_ssb_verbatim_${q.replace(".", "_")}",

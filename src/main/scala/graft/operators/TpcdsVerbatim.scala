@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.io.Source
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sessions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** VERBATIM TPC-DS query texts over a derived micro-schema — the round-10
@@ -717,6 +717,13 @@ object TpcdsVerbatim {
   private val baseTables =
     Seq("orders", "lineitem", "part", "supplier")
 
+  /** The fact fixtures are lineitem-linear; materializing them makes the
+    * verbatim queries scan the micro-schema exactly how TPC-DS is run
+    * against real tables, with CBO join reordering on. store_sales is the
+    * largest fact. */
+  val corpus: Sessions.Corpus = Sessions.Corpus("tpcds", baseTables,
+    fixtures, "store_sales", joinReorder = true)
+
   /** round-10 set */
   private val wave1: Seq[String] = Seq("q1", "q3", "q6", "q19", "q41",
     "q42", "q52", "q55", "q65", "q68", "q73", "q79", "q88", "q96")
@@ -936,96 +943,9 @@ object TpcdsVerbatim {
                    s"FROM (\n$renamed\n) graft_cast_shim")
   }
 
-  /** The fact fixtures are lineitem-linear; persisting them makes the
-    * 96 verbatim queries scan the MATERIALIZED micro-schema (exactly how
-    * TPC-DS is run against real tables) instead of re-deriving ~600k-row
-    * channel tables inside every query plan — one materialization per
-    * (SparkContext, sf dir), reused across the registry run. Values are
-    * identical either way (the derivation is deterministic); only the
-    * scan node changes. */
-
-  private val fixtureSessions = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String), SparkSession]
-
-  /** Materialized-fixture location for a source dir — content-versioned by
-    * the fixture SQL so stale scratch dirs are never reused. */
-  def fixtureRoot(dir: String): java.io.File = {
-    val version = java.util.UUID.nameUUIDFromBytes(
-      (dir + fixtures.map(_._2).mkString(""))
-        .getBytes("UTF-8")).toString.replace("-", "").take(16)
-    new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_tpcds_fixture_$version")
-  }
-
-  /** Isolated session with the fixture views registered over a
-    * MATERIALIZED copy of the micro-schema; cached per (context, sf dir).
-    *
-    * The fixtures are derived once per (sf dir, fixture-SQL version) and
-    * written to parquet under java.io.tmpdir — exactly how TPC-DS is
-    * actually benchmarked (generate the tables, then measure the
-    * queries). Deriving them lazily inside every query plan instead
-    * would re-run the dims' single-partition row_number window once per
-    * date_dim ALIAS per query and re-build ~lineitem-sized channel
-    * tables per query — and Bench's clearCache-between-iterations policy
-    * (which exists to release per-query intermediates) would defeat any
-    * in-memory persist. Values are identical either way: the derivation
-    * is deterministic SQL, and the DuckDB oracle recomputes the same
-    * content through its WITH prefix. */
-  def fixtureSession(outer: SparkSession, dir: String): SparkSession =
-    fixtureSessions.getOrElseUpdate((outer.sparkContext, dir), {
-      val spark = outer.newSession()
-      Tables.registerAll(spark, dir)
-      baseTables.foreach(t =>
-        spark.table(t).createOrReplaceTempView(s"tpch_$t"))
-      val root = fixtureRoot(dir)
-      val done = new java.io.File(root, "_ALL_DONE")
-      if (!done.exists()) {
-        fixtures.foreach { case (n, sql) =>
-          spark.sql(sql).write.mode("overwrite")
-            .parquet(new java.io.File(root, n).getPath)
-        }
-        done.createNewFile()
-      }
-      // the materialized schema is registered as CATALOGED tables in a
-      // dedicated database with ANALYZE statistics (table + all-column),
-      // and CBO join-reordering is enabled on this session: the verbatim
-      // texts spell explicit JOIN chains (q72 starts catalog_sales x
-      // inventory ON item alone — 2.5B intermediate rows if executed as
-      // written), and stats-driven reorder is how a real Spark
-      // deployment plans them. Session-scoped: current database and CBO
-      // confs live on this session only; other sessions' temp views are
-      // unaffected (temp views shadow catalog tables anyway).
-      // drop the derivation-time temp views: TPC-H 'customer'/'part'/
-      // 'orders'/'supplier' would otherwise SHADOW the same-named
-      // TPC-DS catalog tables (temp views win name resolution)
-      (Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings") ++
-        baseTables.map("tpch_" + _))
-        .foreach(v => spark.catalog.dropTempView(v))
-      val db = s"graft_tpcds_${root.getName.stripPrefix("graft_tpcds_fixture_")}"
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-      spark.catalog.setCurrentDatabase(db)
-      fixtures.foreach { case (n, _) =>
-        val path = new java.io.File(root, n).getPath
-        spark.sql(
-          s"CREATE TABLE IF NOT EXISTS $n USING parquet LOCATION '$path'")
-        spark.sql(s"ANALYZE TABLE $n COMPUTE STATISTICS FOR ALL COLUMNS")
-      }
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled",
-        sys.env.getOrElse("GRAFT_JOIN_REORDER", "true"))
-      // shared small-fixture profile (rationale at Engine.tuneFixtureSession);
-      // r12 ran this session at the 32-partition default while TPC-H/SSB
-      // floored at 8 — unified in r13, store_sales is the largest fact
-      graft.Engine.tuneFixtureSession(spark,
-        spark.table("store_sales").count())
-      spark
-    })
-
   /** Run the verbatim text over the (cached) fixture session. */
   def run(outer: SparkSession, dir: String, q: String): DataFrame = {
-    val spark = fixtureSession(outer, dir)
-    val df = spark.sql(queryText(q))
+    val df = Sessions.fixture(outer, dir, corpus).sql(queryText(q))
     val named = renames.get(q).map(ns => df.toDF(ns: _*)).getOrElse(df)
     dualRound.getOrElse(q, Nil).foldLeft(named) { (d, c) =>
       d.withColumn(c, org.apache.spark.sql.functions

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.io.Source
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sessions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** VERBATIM TPC-H query texts — the reference's PRIMARY benchmark corpus
@@ -274,6 +274,20 @@ object TpchVerbatim {
   /** base parquet tables the fixture derives from */
   private val baseTables = Seq("orders", "lineitem")
 
+  /** lineitem is the schema's largest fact. CBO join REORDERING is off
+    * for this corpus (stats-based join STRATEGY sizing via cbo.enabled
+    * stays on): measured at x30/x100 (TpchScaleBench, min over >=2 runs),
+    * the reorderer's row-count estimates over the replicated fixture
+    * invert q5 into a suppliers-x-customers-per-nation explosion (5.3 s vs
+    * 2.0 s at x100) and double q8/q9 at x30 (1.60/1.62 s vs 0.79/0.88 s);
+    * at bench scale the section reads 6.2-7.3 s vs 8.2-9.2 s across 5
+    * interleaved runs. The texts' written join order (the spec's own) is
+    * the better plan at every measured factor. TPC-DS/SSB keep reordering
+    * on - measured there, the A/B is inside the noise band and their pins
+    * predate r13. */
+  val corpus: Sessions.Corpus = Sessions.Corpus("tpchv", baseTables,
+    fixtures, "lineitem", joinReorder = false)
+
   val queryNames: Seq[String] = (1 to 22).map(i => s"q$i")
 
   private def resource(path: String): String = {
@@ -326,82 +340,9 @@ object TpchVerbatim {
     })
   }
 
-  private val fixtureSessions = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String), SparkSession]
-
-  private def fixtureVersion(dir: String): String =
-    java.util.UUID.nameUUIDFromBytes(
-      (dir + fixtures.map(_._2).mkString(""))
-        .getBytes("UTF-8")).toString.replace("-", "").take(16)
-
-  /** Where [[fixtureSession]] materializes the micro-schema for `dir` —
-    * the scaled-run DuckDB twin ([[graft.tools.TpchScaleBench]] +
-    * tools/tpch_scale_duck.py) reads the SAME parquet, so both engines
-    * are timed over byte-identical tables. */
-  def fixtureRoot(dir: String): java.io.File = new java.io.File(
-    System.getProperty("java.io.tmpdir"),
-    s"graft_tpchv_fixture_${fixtureVersion(dir)}")
-
-  /** Isolated session over a MATERIALIZED, ANALYZE-cataloged,
-    * CBO-reordering copy of the micro-schema — one materialization per
-    * (SparkContext, sf dir), reused across the registry run. Same
-    * mechanics (and rationale) as [[TpcdsVerbatim.fixtureSession]]. */
-  def fixtureSession(outer: SparkSession, dir: String): SparkSession =
-    fixtureSessions.getOrElseUpdate((outer.sparkContext, dir), {
-      val spark = outer.newSession()
-      Tables.registerAll(spark, dir)
-      baseTables.foreach(t =>
-        spark.table(t).createOrReplaceTempView(s"tpch_$t"))
-      val version = fixtureVersion(dir)
-      val root = fixtureRoot(dir)
-      val done = new java.io.File(root, "_ALL_DONE")
-      if (!done.exists()) {
-        fixtures.foreach { case (n, sql) =>
-          spark.sql(sql).write.mode("overwrite")
-            .parquet(new java.io.File(root, n).getPath)
-        }
-        done.createNewFile()
-      }
-      // the TPC-H table names are exactly the base temp-view names — drop
-      // every derivation-time temp view so the cataloged micro-schema (not
-      // the raw parquet) resolves inside the verbatim texts
-      (Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings") ++
-        baseTables.map("tpch_" + _))
-        .foreach(v => spark.catalog.dropTempView(v))
-      val db = s"graft_tpchv_$version"
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-      spark.catalog.setCurrentDatabase(db)
-      fixtures.foreach { case (n, _) =>
-        val path = new java.io.File(root, n).getPath
-        spark.sql(
-          s"CREATE TABLE IF NOT EXISTS $n USING parquet LOCATION '$path'")
-        spark.sql(s"ANALYZE TABLE $n COMPUTE STATISTICS FOR ALL COLUMNS")
-      }
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      // CBO join REORDERING is off for this corpus (stats-based join
-      // STRATEGY sizing via cbo.enabled stays on): measured at x30/x100
-      // (TpchScaleBench, min over >=2 runs), the reorderer's row-count
-      // estimates over the replicated fixture invert q5 into a
-      // suppliers-x-customers-per-nation explosion (5.3 s vs 2.0 s at
-      // x100) and double q8/q9 at x30 (1.60/1.62 s vs 0.79/0.88 s); at
-      // bench scale the section reads 6.2-7.3 s vs 8.2-9.2 s across 5
-      // interleaved runs. The texts' written join order (the spec's own)
-      // is the better plan at every measured factor. Env-overridable for
-      // future A/Bs. TPC-DS/SSB keep reordering on - measured there, the
-      // A/B is inside the noise band and their pins predate r13.
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled",
-        sys.env.getOrElse("GRAFT_JOIN_REORDER", "false"))
-      // shared small-fixture profile (rationale at the definition):
-      // lineitem is the schema's largest fact
-      graft.Engine.tuneFixtureSession(spark,
-        spark.table("lineitem").count())
-      spark
-    })
-
   /** Run the verbatim text over the (cached) fixture session. */
   def run(outer: SparkSession, dir: String, q: String): DataFrame =
-    fixtureSession(outer, dir).sql(queryText(q))
+    Sessions.fixture(outer, dir, corpus).sql(queryText(q))
 
   def queryFor(q: String): QueryDef = QueryDef(
     s"q_tpch_verbatim_$q",

@@ -82,7 +82,7 @@ object PlanSignature {
 
   /** The verbatim fixture sessions catalog their micro-schema in a
     * database named by the fixture-SQL version hash
-    * ([[graft.operators.TpcdsVerbatim.fixtureSession]] et al.), and scan
+    * ([[graft.Sessions.fixture]]), and scan
     * nodes carry that name. The hash is DATA provenance, not plan shape —
     * without this, any fixture edit rewrites every signature in its corpus
     * and drowns the one diff that matters (r13: the q34 ticket lane

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Engine
+import graft.{Engine, Sessions}
 import graft.operators.TpcdsVerbatim
 import org.apache.spark.sql.SparkSession
 
@@ -13,13 +13,13 @@ import org.apache.spark.sql.SparkSession
   *   - reuses [[TpchScaleBench.buildScratch]] to replicate orders+lineitem
   *     `factor`× with shifted keys; the TPC-DS micro-schema is PARAMETRIC
   *     in those base facts (every fact attribute is mod arithmetic on the
-  *     keys), so [[TpcdsVerbatim.fixtureSession]] over the scaled dir
+  *     keys), so [[graft.Sessions.fixture]] over the scaled dir
   *     derives a `factor`×-sized store/catalog/web schema with full
   *     referential integrity while the dims keep their spec-shaped caps;
-  *   - the fixture materializes through the NORMAL fixtureSession path
+  *   - the fixture materializes through the NORMAL Sessions.fixture path
   *     (ANALYZE + CBO + the shared session profile, whose 8-partition
   *     floor self-releases and whose SHJ preference self-ENABLES above
-  *     [[Engine.smallFactRows]]);
+  *     [[graft.Sessions.smallFactRows]]);
   *   - times every verbatim text min-of-3 warm, prints one JSON line, and
   *     writes each query's prefix-free DuckDB text under
   *     `<fixtureRoot>/_duck_sql/` so tools/tpcds_scale_duck.py can time
@@ -42,8 +42,8 @@ object TpcdsScaleBench {
       out
     }
     val t0 = System.nanoTime()
-    val session = TpcdsVerbatim.fixtureSession(spark, dir)
-    val root = TpcdsVerbatim.fixtureRoot(dir)
+    val session = Sessions.fixture(spark, dir, TpcdsVerbatim.corpus)
+    val root = TpcdsVerbatim.corpus.root(dir)
     println(f"[tpcds-scale x$factor] fixture ready in " +
       f"${(System.nanoTime() - t0) / 1e9}%.1fs  root=${root.getPath}  " +
       s"shufflePartitions=${session.conf.get("spark.sql.shuffle.partitions")}  " +

@@ -2,7 +2,7 @@ package graft.tools
 
 import scala.collection.mutable
 
-import graft.Engine
+import graft.{Engine, Sessions}
 import graft.operators.TpcdsVerbatim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -42,7 +42,7 @@ object TpcdsScalePlan {
       SparkSession.builder().master(s"local[${Engine.cpus}]")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = if (factor == 1) src else s"/tmp/graft_tpch_scale_x$factor"
-    val session = TpcdsVerbatim.fixtureSession(spark, dir)
+    val session = Sessions.fixture(spark, dir, TpcdsVerbatim.corpus)
     val listener = new StageStats
     spark.sparkContext.addSparkListener(listener)
     qs.foreach { q =>

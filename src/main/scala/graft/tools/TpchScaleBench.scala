@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Engine
+import graft.{Engine, Sessions}
 import graft.operators.TpchVerbatim
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   *     and full referential integrity, while the dims stay at their
   *     spec-shaped caps and every literal predicate keeps hitting);
   *   - materializes the fixture through the normal
-  *     [[TpchVerbatim.fixtureSession]] (ANALYZE + CBO + the shared
+  *     [[graft.Sessions.fixture]] (ANALYZE + CBO + the shared
   *     small-fixture profile, which self-releases above
-  *     [[Engine.smallFactRows]] so the scaled run keeps cores-wide
+  *     [[graft.Sessions.smallFactRows]] so the scaled run keeps cores-wide
   *     shuffles);
   *   - times all 22 texts min-of-3 warm and prints one JSON line plus
   *     the materialized fixture root, which tools/tpch_scale_duck.py
@@ -70,10 +70,10 @@ object TpchScaleBench {
       out
     }
     val t0 = System.nanoTime()
-    val session = TpchVerbatim.fixtureSession(spark, dir)
+    val session = Sessions.fixture(spark, dir, TpchVerbatim.corpus)
     println(f"[tpch-scale x$factor] fixture ready in " +
       f"${(System.nanoTime() - t0) / 1e9}%.1fs  " +
-      s"root=${TpchVerbatim.fixtureRoot(dir).getPath}  " +
+      s"root=${TpchVerbatim.corpus.root(dir).getPath}  " +
       s"shufflePartitions=${session.conf.get("spark.sql.shuffle.partitions")}")
 
     val sigDir = java.nio.file.Paths.get(
@@ -104,7 +104,7 @@ object TpchScaleBench {
     val total = times.map(_._2).sum
     println(s"""{"metric":"tpch_verbatim_x$factor","value":${f"$total%.3f"},""" +
       s""""unit":"sec","factor":$factor,"fixtureRoot":""" +
-      s""""${TpchVerbatim.fixtureRoot(dir).getPath}","queries":{""" +
+      s""""${TpchVerbatim.corpus.root(dir).getPath}","queries":{""" +
       times.map { case (q, t) => s""""$q":${f"$t%.3f"}""" }.mkString(",") +
       "}}")
     spark.stop()

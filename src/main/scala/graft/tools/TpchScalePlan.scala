@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Engine
+import graft.{Engine, Sessions}
 import graft.operators.TpchVerbatim
 import org.apache.spark.sql.SparkSession
 
@@ -20,7 +20,7 @@ object TpchScalePlan {
       SparkSession.builder().master(s"local[${Engine.cpus}]")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = if (factor == 1) src else s"/tmp/graft_tpch_scale_x$factor"
-    val session = TpchVerbatim.fixtureSession(spark, dir)
+    val session = Sessions.fixture(spark, dir, TpchVerbatim.corpus)
     qs.foreach { q =>
       val df = session.sql(TpchVerbatim.queryText(q))
       df.count() // execute so AQE finalizes
