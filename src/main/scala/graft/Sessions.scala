@@ -5,7 +5,8 @@ import java.nio.file.{FileSystemException, Files, Path, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, lit}
 
 /** Every session derived from an entry point's session, in one place — the
   * graft counterpart of the reference's single per-session hook
@@ -17,6 +18,9 @@ import org.apache.spark.sql.SparkSession
   *   - [[spread]]: the spread-view session, cached per (context, dir);
   *   - [[fixture]]: a verbatim corpus's materialized, cataloged
   *     micro-schema, cached per (context, dir, corpus).
+  * The scratch data those sessions read — fixture materializations and the
+  * scaled runs' [[replica]]s — is installed atomically under
+  * `java.io.tmpdir` by one helper ([[installed]]).
   */
 object Sessions {
 
@@ -31,20 +35,32 @@ object Sessions {
     /** content-versioned by the fixture SQL, so stale scratch dirs are
       * never reused */
     private def version(dir: String): String =
-      java.util.UUID.nameUUIDFromBytes(
-        (dir + fixtures.map(_._2).mkString("")).getBytes("UTF-8"))
-        .toString.replace("-", "").take(16)
+      Sessions.version(dir + fixtures.map(_._2).mkString(""))
 
     /** Where the micro-schema for `dir` is materialized — the scaled-run
-      * DuckDB twins (tools/tpc*_scale_duck.py) read the SAME parquet, so
-      * both engines are timed over byte-identical tables. */
-    def root(dir: String): File = new File(
-      System.getProperty("java.io.tmpdir"), s"graft_${tag}_fixture_${version(dir)}")
+      * DuckDB twin (tools/scale_duck.py) reads the SAME parquet, so both
+      * engines are timed over byte-identical tables. */
+    def root(dir: String): File = scratch(s"graft_${tag}_fixture_${version(dir)}")
 
     /** the catalog database the fixture tables live in (the version suffix
       * is normalized away by [[graft.tools.PlanSignature.normalize]]) */
     def database(dir: String): String = s"graft_${tag}_${version(dir)}"
   }
+
+  private def version(key: String): String =
+    java.util.UUID.nameUUIDFromBytes(key.getBytes("UTF-8"))
+      .toString.replace("-", "").take(16)
+
+  private def scratch(name: String): File =
+    new File(System.getProperty("java.io.tmpdir"), name)
+
+  /** The statement each corpus's DuckDB oracle opens with. DuckDB defaults
+    * to NULLS LAST on ASC; Spark's rule is NULLS FIRST on ASC / LAST on
+    * DESC. The rollup queries' ORDER BY + LIMIT truncate at rows whose
+    * grouping keys are NULL, so the oracle session must order exactly like
+    * Spark (this option IS Spark's rule, so it can only align later
+    * statements, never diverge them). */
+  val duckNullOrder = "SET default_null_order='nulls_first_on_asc_last_on_desc';\n"
 
   /** Cached derived sessions; kind is "spread" or a corpus tag. */
   private val derived =
@@ -70,10 +86,18 @@ object Sessions {
     * 66 tiny set-op statements, each with exchanges). Physical-only knob —
     * every pinned value is partitioning-invariant. (AQE stays ON: measured,
     * disabling it doubles the batched mega-union replay — stage coalescing
-    * earns its overhead here.) */
+    * earns its overhead here.)
+    *
+    * Leaf parallelism is pinned to the reference host's core count
+    * ([[Engine.defaultCpus]]): a local relation (the batteries' VALUES
+    * views) splits into min(rows, spark.sql.leafNodeDefaultParallelism)
+    * partitions, which defaults to the local core count, and a float
+    * aggregate's partial-merge order — and so its last digit (core
+    * group-by's SKEWNESS) — would otherwise follow the host. */
   def battery(outer: SparkSession): SparkSession = {
     val s = outer.newSession()
     s.conf.set("spark.sql.shuffle.partitions", 4)
+    s.conf.set("spark.sql.leafNodeDefaultParallelism", Engine.defaultCpus)
     s
   }
 
@@ -142,17 +166,70 @@ object Sessions {
   private[graft] val Done = "_ALL_DONE"
 
   /** Write the corpus's fixtures under `root` unless a complete copy is
-    * there. Safe across JVMs sharing `java.io.tmpdir`: each writer fills a
-    * private sibling dir, marks it, and renames it onto `root` atomically;
-    * a writer that loses the race discards its copy and uses the winner's. */
+    * there ([[installed]]). */
   private[graft] def materialize(spark: SparkSession, corpus: Corpus,
-      root: File): Unit = {
-    if (new File(root, Done).exists()) return
-    val tmp = Files.createTempDirectory(root.toPath.getParent, root.getName + ".tmp")
-    try {
+      root: File): Unit =
+    installed(root) { tmp =>
       corpus.fixtures.foreach { case (n, sql) =>
         spark.sql(sql).write.parquet(tmp.resolve(n).toString)
       }
+    }
+
+  /** The sf dir `src` with its facts replicated `factor`× — the input of
+    * the scaled runs (graft.tools.ScaleBench, graft.tools.ScaleSmoke).
+    * Built once per (src, factor) under `java.io.tmpdir` ([[installed]]),
+    * reused across runs and JVMs; returns the replica's dir.
+    *
+    * Every replica of a fact keeps referential integrity to the same dims
+    * while multiplying fact-side cardinality: orders and lineitem shift
+    * their order keys by `i × oMax`, so the verbatim corpora — parametric
+    * in those keys, every derived attribute is mod arithmetic on them —
+    * derive `factor`× fixtures with distinct attribute values while the
+    * dims keep their spec-shaped caps. events shift ids and move 31 days
+    * per replica. documents replicate as a fact with unchanged text: every
+    * replica is an exact duplicate, the heavily-duplicated-corpus stress
+    * for the dedup path (exact dedup must collapse the replicas BEFORE the
+    * near-dup stage). embeddings stays dim-sized — the ANN/LSH rows would
+    * make pair volume quadratic by construction on exact duplicates — and
+    * is ALSO written replicated as `embeddings_rep` for k-means. */
+  def replica(spark: SparkSession, src: String, factor: Int): String = {
+    val root = scratch(s"graft_replica_x${factor}_${version(src)}")
+    replicate(spark, src, factor, root)
+    root.getPath
+  }
+
+  private[graft] def replicate(spark: SparkSession, src: String, factor: Int,
+      root: File): Unit =
+    installed(root) { tmp =>
+      def write(name: String, df: DataFrame): Unit =
+        df.write.parquet(tmp.resolve(s"$name.parquet").toString)
+      def replicas(t: String)(shift: (DataFrame, Int) => DataFrame) =
+        (0 until factor).map(i => shift(Tables(spark, src, t), i)).reduce(_ union _)
+      Seq("region", "nation", "customer", "supplier", "part", "embeddings")
+        .foreach(t => write(t, Tables(spark, src, t)))
+      val oMax = 10000000L
+      write("orders", replicas("orders") { (df, i) =>
+        df.withColumn("o_orderkey", col("o_orderkey") + lit(i * oMax)) })
+      write("lineitem", replicas("lineitem") { (df, i) =>
+        df.withColumn("l_orderkey", col("l_orderkey") + lit(i * oMax)) })
+      write("events", replicas("events") { (df, i) =>
+        df.withColumn("event_id", col("event_id") + lit(i * oMax))
+          .withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 31} DAYS")) })
+      write("documents", replicas("documents") { (df, i) =>
+        df.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)) })
+      write("embeddings_rep", replicas("embeddings") { (df, i) =>
+        df.withColumn("vec_id", col("vec_id") + lit(i * 1000000L)) })
+    }
+
+  /** Fill `root` through `write` unless a complete copy is there. Safe
+    * across JVMs sharing `java.io.tmpdir`: each writer fills a private
+    * sibling dir, marks it, and renames it onto `root` atomically; a writer
+    * that loses the race discards its copy and uses the winner's. */
+  private def installed(root: File)(write: Path => Unit): Unit = {
+    if (new File(root, Done).exists()) return
+    val tmp = Files.createTempDirectory(root.toPath.getParent, root.getName + ".tmp")
+    try {
+      write(tmp)
       Files.createFile(tmp.resolve(Done))
       if (!install(tmp, root)) {
         // a root without its marker was left by an interrupted writer that
@@ -162,7 +239,7 @@ object Sessions {
         try Files.move(root.toPath, stale, StandardCopyOption.ATOMIC_MOVE)
         catch { case _: FileSystemException => }
         deleteTree(stale)
-        require(install(tmp, root), s"cannot install fixtures at $root")
+        require(install(tmp, root), s"cannot install $root")
       }
     } finally deleteTree(tmp)
   }
@@ -189,7 +266,7 @@ object Sessions {
     * are pure task-scheduling floor — 8 partitions cut per-query
     * stage-launch overhead without moving any value (every fixture sum is
     * exact under any accumulation order by design). Above the threshold
-    * (the scaled verbatim runs, [[graft.tools.TpchScaleBench]]) the floor
+    * (the scaled verbatim runs, [[graft.tools.ScaleBench]]) the floor
     * would SERIALIZE real work onto a quarter of the cores, so the session
     * keeps the engine-wide cores-wide default. At deploy scale the
     * partition count is a deploy-time conf, not a plan property — plan
@@ -209,7 +286,7 @@ object Sessions {
     // 1.08/1.10): micro-scale joins mostly broadcast, and where a shuffle
     // survives, the SHJ build adds planning/AQE-rewrite overhead without a
     // sort worth skipping. ABOVE the threshold (the scaled verbatim runs,
-    // TpchScaleBench x30/x100) shuffled-hash is measured to win big — q9
+    // ScaleBench tpch x30/x100) shuffled-hash is measured to win big — q9
     // 5.9→2.0 s at x30, section 26.2→18.4 s — because the fact⋈fact joins
     // otherwise pay two full sorts. The OOM risk SMJ hedges against stays
     // bounded: the static pick still requires the planner's size

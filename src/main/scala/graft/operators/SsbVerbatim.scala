@@ -220,10 +220,12 @@ object SsbVerbatim {
     val prefix =
       baseTables.map(t => s"tpch_$t AS (SELECT * FROM main.$t)") ++
         fixtures.map { case (n, sql) => s""""$n" AS ($sql)""" }
-    val nullOrder =
-      "SET default_null_order='nulls_first_on_asc_last_on_desc';\n"
-    s"${nullOrder}WITH ${prefix.mkString(",\n")}\n${queryText(q).trim}"
+    s"${Sessions.duckNullOrder}WITH ${prefix.mkString(",\n")}\n${oracleBody(q)}"
   }
+
+  /** The oracle statement without the fixture prefix, for DuckDB reading
+    * the MATERIALIZED fixture parquet (tools/scale_duck.py). */
+  def oracleBody(q: String): String = queryText(q).trim
 
   def run(outer: SparkSession, dir: String, q: String): DataFrame =
     Sessions.fixture(outer, dir, corpus).sql(queryText(q))

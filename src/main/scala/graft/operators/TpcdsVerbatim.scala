@@ -882,13 +882,14 @@ object TpcdsVerbatim {
     * (a leading WITH in the query folds into the prefix's clause list).
     * Backtick identifier quotes (Spark dialect) become ANSI double quotes
     * on this side only. */
-  def oracleFor(q: String): String = oracleSql(q, withFixturePrefix = true)
+  def oracleFor(q: String): String =
+    Sessions.duckNullOrder + oracleSql(q, withFixturePrefix = true)
 
-  /** Oracle text WITHOUT the fixture-derivation WITH prefix — for runs
+  /** Oracle statement WITHOUT the fixture-derivation WITH prefix — for runs
     * where DuckDB reads the MATERIALIZED fixture parquet directly (the
-    * scaled twin, tools/tpcds_scale_duck.py), so both engines scan
-    * byte-identical tables. Same body fixes / null order / rename-cast
-    * shims as [[oracleFor]]. */
+    * scaled twin, tools/scale_duck.py, which sets the null order once per
+    * connection), so both engines scan byte-identical tables. Same body
+    * fixes / rename-cast shims as [[oracleFor]]. */
   def oracleBody(q: String): String = oracleSql(q, withFixturePrefix = false)
 
   private def oracleSql(q: String, withFixturePrefix: Boolean): String = {
@@ -921,13 +922,6 @@ object TpcdsVerbatim {
         s"WITH ${prefix.mkString(",\n")},\n${body.drop(5)}"
       else
         s"WITH ${prefix.mkString(",\n")}\n$body"
-    // DuckDB defaults to NULLS LAST on ASC; Spark's rule is
-    // NULLS FIRST on ASC / LAST on DESC. The rollup queries' ORDER BY +
-    // LIMIT truncate at rows whose grouping keys are NULL, so the oracle
-    // session must order exactly like Spark (this option IS Spark's
-    // rule, so it can only align later statements, never diverge them).
-    val nullOrder =
-      "SET default_null_order='nulls_first_on_asc_last_on_desc';\n"
     val renamed =
       if (oracleRenames.contains(q))
         s"SELECT * FROM (\n$core\n) AS graft_renamed(" +
@@ -938,9 +932,9 @@ object TpcdsVerbatim {
         .map { case (c, t) => s"""CAST("$c" AS $t) AS "$c"""" } ++
         dualRound.getOrElse(q, Nil)
           .map(c => s"""CAST(round("$c", 4) AS DOUBLE) AS "$c"""")
-    nullOrder + (if (replaces.isEmpty) renamed
-                 else s"SELECT * REPLACE (${replaces.mkString(", ")}) " +
-                   s"FROM (\n$renamed\n) graft_cast_shim")
+    if (replaces.isEmpty) renamed
+    else s"SELECT * REPLACE (${replaces.mkString(", ")}) " +
+      s"FROM (\n$renamed\n) graft_cast_shim"
   }
 
   /** Run the verbatim text over the (cached) fixture session. */

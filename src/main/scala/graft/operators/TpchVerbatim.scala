@@ -276,7 +276,7 @@ object TpchVerbatim {
 
   /** lineitem is the schema's largest fact. CBO join REORDERING is off
     * for this corpus (stats-based join STRATEGY sizing via cbo.enabled
-    * stays on): measured at x30/x100 (TpchScaleBench, min over >=2 runs),
+    * stays on): measured at x30/x100 (tools.ScaleBench, min over >=2 runs),
     * the reorderer's row-count estimates over the replicated fixture
     * invert q5 into a suppliers-x-customers-per-nation explosion (5.3 s vs
     * 2.0 s at x100) and double q8/q9 at x30 (1.60/1.62 s vs 0.79/0.88 s);
@@ -312,7 +312,14 @@ object TpchVerbatim {
     * The TPC-H files all open with a `-- using default substitutions`
     * comment line; it is dropped on the ORACLE side only (a leading WITH
     * must fold into the prefix's clause list — q15). */
-  def oracleFor(q: String): String = {
+  def oracleFor(q: String): String =
+    Sessions.duckNullOrder + oracleSql(q, withFixturePrefix = true)
+
+  /** The oracle statement without the fixture prefix, for DuckDB reading
+    * the MATERIALIZED fixture parquet (tools/scale_duck.py). */
+  def oracleBody(q: String): String = oracleSql(q, withFixturePrefix = false)
+
+  private def oracleSql(q: String, withFixturePrefix: Boolean): String = {
     // `main.` qualification: the fixture CTE names ARE the base view names
     // (TPC-H tables shadow the raw parquet by design), so the unqualified
     // spelling TpcdsVerbatim uses would bind the prefix's own later CTEs
@@ -324,20 +331,19 @@ object TpchVerbatim {
       .dropWhile(l => l.trim.isEmpty || l.trim.startsWith("--"))
       .mkString("\n").trim
     val core =
-      if (body.toUpperCase.startsWith("WITH "))
+      if (!withFixturePrefix) body
+      else if (body.toUpperCase.startsWith("WITH "))
         s"WITH ${prefix.mkString(",\n")},\n${body.drop(5)}"
       else
         s"WITH ${prefix.mkString(",\n")}\n$body"
-    val nullOrder =
-      "SET default_null_order='nulls_first_on_asc_last_on_desc';\n"
-    nullOrder + (oracleCasts.get(q) match {
+    oracleCasts.get(q) match {
       case Some(casts) =>
         val rep = casts
           .map { case (c, t) => s"""CAST("$c" AS $t) AS "$c"""" }
           .mkString(", ")
         s"SELECT * REPLACE ($rep) FROM (\n$core\n) graft_cast_shim"
       case None => core
-    })
+    }
   }
 
   /** Run the verbatim text over the (cached) fixture session. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Dev probe: print the join/exchange/aggregate skeleton of the final
   * (AQE-resolved) physical plan for the named registry queries.
   * `sbt "runMain graft.tools.PlanPeek q_tpch_q2 q_ssb_q2_1"`;
-  * `SPARK_GRAFT_DIR=/tmp/graft_scale_x100` overrides the data dir.
+  * `SPARK_GRAFT_DIR=<dir>` (e.g. a `Sessions.replica` dir) overrides the data dir.
   */
 object PlanPeek {
   def main(args: Array[String]): Unit = {

@@ -90,6 +90,20 @@ object PlanSignature {
   private[graft] def normalize(sig: String): String =
     sig.replaceAll("(graft_(?:tpcds|tpchv|ssbv))_[0-9a-f]{16}", "$1_v")
 
+  /** The committed pins, one `<query name>.sig` per pinned registry row
+    * (PlanStabilitySpec). */
+  val pinDir: java.nio.file.Path =
+    java.nio.file.Paths.get("src/test/resources/plan-signatures")
+
+  /** `sig` against `name`'s committed pin: PINNED, DIFFERS-FROM-PIN or
+    * NO-PIN-FILE. */
+  def pinStatus(name: String, sig: String): String = {
+    val pin = pinDir.resolve(s"$name.sig")
+    if (!java.nio.file.Files.exists(pin)) "NO-PIN-FILE"
+    else if (java.nio.file.Files.readString(pin) == sig) "PINNED"
+    else "DIFFERS-FROM-PIN"
+  }
+
   /** Execute the frame (so AQE finalizes) and return the signature of the
     * final plan. */
   def executedSignature(df: DataFrame): String = {

@@ -3,8 +3,63 @@ package graft.tools
 import scala.collection.mutable
 
 import graft.{Engine, SparkEntry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+
+/** Per-stage task count, summed and longest task time from the listener
+  * bus — the one stage table [[QueryProfile]] and [[ScaleBench]] print. */
+private[tools] final class StageStats extends SparkListener {
+  private val stages = mutable.Buffer[(Int, String, Int, Long, Long)]()
+  private val taskMax = mutable.Map[Int, Long]().withDefaultValue(0L)
+  private val taskSum = mutable.Map[Int, Long]().withDefaultValue(0L)
+  private val taskCnt = mutable.Map[Int, Int]().withDefaultValue(0)
+  private val drainGroup = "graft-stage-stats-drain"
+  @volatile private var drainJob = -1
+  @volatile private var drainStages = Set.empty[Int]
+  private val drained = new java.util.concurrent.Semaphore(0)
+
+  override def onJobStart(j: SparkListenerJobStart): Unit =
+    if (Option(j.properties).exists(
+        _.getProperty("spark.jobGroup.id") == drainGroup)) {
+      drainStages = j.stageIds.toSet
+      drainJob = j.jobId
+    }
+  override def onJobEnd(j: SparkListenerJobEnd): Unit =
+    if (j.jobId == drainJob) drained.release()
+  override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
+    val d = Option(t.taskInfo).map(_.duration).getOrElse(0L)
+    taskMax(t.stageId) = math.max(taskMax(t.stageId), d)
+    taskSum(t.stageId) += d
+    taskCnt(t.stageId) += 1
+  }
+  override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+    synchronized {
+      val id = s.stageInfo.stageId
+      if (!drainStages.contains(id))
+        stages += ((id, s.stageInfo.name.split("\n")(0).take(60),
+          taskCnt(id), taskSum(id), taskMax(id)))
+    }
+  def reset(): Unit = synchronized {
+    stages.clear(); taskMax.clear(); taskSum.clear(); taskCnt.clear()
+  }
+
+  /** The `top` stages by longest task since the last [[reset]]. A marker
+    * job drains the bus first: events arrive in order, so once the marker
+    * has ended every earlier stage is recorded. */
+  def table(sc: SparkContext, top: Int): Seq[String] = {
+    sc.setJobGroup(drainGroup, "drain the listener bus", interruptOnCancel = false)
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.clearJobGroup()
+    require(drained.tryAcquire(120, java.util.concurrent.TimeUnit.SECONDS),
+      "the listener bus did not drain")
+    synchronized(stages.sortBy(-_._5).take(top).toSeq).map {
+      case (id, nm, n, sum, max) =>
+        f"  stage $id%4d tasks=$n%4d sumTask=${sum / 1e3}%7.2fs " +
+          f"maxTask=${max / 1e3}%7.2fs  $nm"
+    }
+  }
+}
 
 /** Dev probe (guide §1): per-query breakdown of WHERE the wall time goes —
   * driver planning (df construction + analysis) vs execution — plus
@@ -15,28 +70,6 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.tools.QueryProfile q_profile_lineitem q_agg_hll_distinct"
   */
 object QueryProfile {
-  private final class StageStats extends SparkListener {
-    val stages = mutable.Buffer[(Int, String, Int, Long, Long)]()
-    private val taskMax = mutable.Map[Int, Long]().withDefaultValue(0L)
-    private val taskSum = mutable.Map[Int, Long]().withDefaultValue(0L)
-    private val taskCnt = mutable.Map[Int, Int]().withDefaultValue(0)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-      val d = Option(t.taskInfo).map(_.duration).getOrElse(0L)
-      taskMax(t.stageId) = math.max(taskMax(t.stageId), d)
-      taskSum(t.stageId) += d
-      taskCnt(t.stageId) += 1
-    }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      synchronized {
-        val id = s.stageInfo.stageId
-        stages += ((id, s.stageInfo.name.split("\n")(0).take(60),
-          taskCnt(id), taskSum(id), taskMax(id)))
-      }
-    def reset(): Unit = synchronized {
-      stages.clear(); taskMax.clear(); taskSum.clear(); taskCnt.clear()
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.get("SPARK_GRAFT_PROFILE_ITERS").map(_.toInt).getOrElse(3)
@@ -67,11 +100,7 @@ object QueryProfile {
       println(f"===== $name  plan=${best._1}%.3fs exec=${best._2}%.3fs " +
         f"(min-of-$iters; all=${results.map(r => f"${r._1 + r._2}%.2f").mkString(",")})")
       // stage table from the LAST iteration (warm)
-      listener.stages.sortBy(-_._5).take(12).foreach {
-        case (id, nm, n, sum, max) =>
-          println(f"  stage $id%4d tasks=$n%4d sumTask=${sum / 1e3}%7.2fs " +
-            f"maxTask=${max / 1e3}%7.2fs  $nm")
-      }
+      listener.table(spark.sparkContext, 12).foreach(println)
     }
     spark.stop()
   }

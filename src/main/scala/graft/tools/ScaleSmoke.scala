@@ -1,16 +1,18 @@
 package graft.tools
 
-import graft.{Engine, SparkEntry, Tables}
+import graft.{Engine, Sessions, SparkEntry, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scale smoke: replicates the fact tables N× into a scratch dir (keys
-  * re-spaced so join fan-outs stay realistic) and runs the heavy registry
-  * queries against it. Validates that plans chosen at sf0.1 still behave at
-  * ~10× — the local stand-in for the 100 TB question. Usage:
-  *   sbt "runMain graft.tools.ScaleSmoke [factor] [srcDir] [outDir]"
+/** Scale smoke: runs the heavy registry queries against the sf dir with
+  * its facts replicated N× ([[graft.Sessions.replica]]: keys re-spaced so
+  * join fan-outs stay realistic). Validates that plans chosen at sf0.1
+  * still behave at ~10× — the local stand-in for the 100 TB question.
+  * Usage:
+  *   sbt "runMain graft.tools.ScaleSmoke [factor] [srcDir] [entry...]"
+  * times every heavy entry, or only the named ones.
   *
-  * GATE mode (round 5): `runMain graft.tools.ScaleSmoke gate fA fB` times
+  * GATE mode (round 5): `runMain graft.tools.ScaleSmoke gate fA fB [srcDir]` times
   * every heavy query at both factors and FAILS (exit 1) when a query not
   * tagged [[graft.QueryDef.parityShape]] grows super-linearly — wall time
   * ratio > (fB/fA) × slack. Parity shapes (the canonical q21 self-joins
@@ -225,8 +227,8 @@ object ScaleSmoke {
   private def runner(name: String): (SparkSession, String) => org.apache.spark.sql.DataFrame =
     extraRunners.getOrElse(name, SparkEntry.queries(name))
 
-  /** [[ScaleProbe]] / PlanStabilitySpec hook: resolve a gate entry by
-    * name (registry queries AND the op_* scale-only runners). */
+  /** PlanStabilitySpec hook: resolve a gate entry by name (registry
+    * queries AND the op_* scale-only runners). */
   private[graft] def runnerFor(name: String) = runner(name)
 
   /** Gate exemptions beyond parityShape, each with the reason on record:
@@ -273,76 +275,13 @@ object ScaleSmoke {
   private def parityShapes: Set[String] =
     SparkEntry.registry.filter(_.parityShape).map(_.name).toSet
 
-  private def buildScratch(spark: SparkSession, factor: Int, src: String,
-      out: String): Unit = {
-    val dims = Seq("region", "nation", "customer", "supplier", "part",
-      "embeddings")
-    dims.foreach { t =>
-      Tables(spark, src, t).write.mode("overwrite").parquet(s"$out/$t.parquet")
-    }
-    // embeddings ALSO written replicated under a separate name: the ANN/
-    // LSH registry queries keep their dim-sized corpus (replicated exact
-    // duplicates would make LSH pair volume quadratic by construction),
-    // while op_kmeans_i8 scales against the fact-sized variant
-    val emb = Tables(spark, src, "embeddings")
-    (0 until factor).map(i => emb
-        .withColumn("vec_id", col("vec_id") + lit(i * 1000000L)))
-      .reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$out/embeddings_rep.parquet")
-    // documents replicate as a FACT with unchanged text: every replica is
-    // an exact duplicate of its original — the heavily-duplicated-corpus
-    // stress for the dedup path (exact dedup must collapse the replicas
-    // BEFORE the near-dup stage, keeping LSH pair counts bounded)
-    val documents = Tables(spark, src, "documents")
-    (0 until factor).map(i => documents
-        .withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
-      .reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    // replicate facts with shifted keys: each replica keeps referential
-    // integrity to the same dims but multiplies fact-side cardinality
-    val oMax = 10000000L
-    val replicas = 0 until factor
-    val orders = Tables(spark, src, "orders")
-    val lineitem = Tables(spark, src, "lineitem")
-    val events = Tables(spark, src, "events")
-    replicas.map(i => orders
-        .withColumn("o_orderkey", col("o_orderkey") + lit(i * oMax)))
-      .reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$out/orders.parquet")
-    replicas.map(i => lineitem
-        .withColumn("l_orderkey", col("l_orderkey") + lit(i * oMax)))
-      .reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-    replicas.map(i => events
-        .withColumn("event_id", col("event_id") + lit(i * oMax))
-        .withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 31} DAYS")))
-      .reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$out/events.parquet")
-  }
-
-  /** min-of-3 warm wall time per heavy query at `dir` (min-of-2 let a
-    * single contended iteration at the larger factor read as 7.7x on a
-    * plan whose clean ratio is 2.5x — one extra sample makes the gate
-    * contention-resistant, same lesson as graft.Bench's min-of-3). */
-  private def timeAll(spark: SparkSession, dir: String,
-      factor: Int): Map[String, Double] =
-    heavy.map { name =>
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        val n = runner(name)(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        (dt, n)
-      }
-      // same discipline as Verify/Bench: a query's persisted intermediates
-      // must not survive into the next measurement (a lingering
-      // 30x-replicated shingle cache OOM'd the x100 phase before this).
-      // getPersistentRDDs also reaps localCheckpoint blocks (connected
-      // components) that catalog.clearCache can't see
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      val (dt, n) = (times.map(_._1).min, times.head._2)
-      println(f"[scale-smoke x$factor] $name%-24s rows=$n%-9d ${dt}%.2fs")
+  /** min-of-3 warm wall time per entry of `names` at `dir`
+    * ([[ScaleBench.warmSeconds]]). */
+  private def timeAll(spark: SparkSession, dir: String, factor: Int,
+      names: Seq[String]): Map[String, Double] =
+    names.map { name =>
+      val dt = ScaleBench.warmSeconds(spark)(runner(name)(spark, dir))
+      println(f"[scale-smoke x$factor] $name%-24s ${dt}%.2fs")
       name -> dt
     }.toMap
 
@@ -357,18 +296,8 @@ object ScaleSmoke {
       val src = args.lift(3).getOrElse("/root/testdata/sf0.1")
       val slack = 2.0  // log-factor + noise headroom over proportional
       val parity = parityShapes
-      // "reuse" as the 4th arg skips scratch rebuilds when the replica
-      // dirs already exist (re-judging exemptions without 10 min of I/O)
-      val reuse = args.lift(3).contains("reuse") || args.lift(4).contains("reuse")
-      val dirs = Seq(fA, fB).map { f =>
-        val out = s"/tmp/graft_scale_x$f"
-        if (!(reuse && java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$out/lineitem.parquet")))) {
-          buildScratch(spark, f, src, out)
-        }
-        f -> out
-      }
-      val Seq(tA, tB) = dirs.map { case (f, d) => timeAll(spark, d, f) }
+      val Seq(tA, tB) = Seq(fA, fB).map(f =>
+        timeAll(spark, Sessions.replica(spark, src, f), f, heavy))
       val budget = slack * fB / fA
       // denominator floored at the per-query scheduling floor (~0.25s at
       // these scales): below it wall time measures job-launch noise, not
@@ -399,9 +328,8 @@ object ScaleSmoke {
     } else {
       val factor = args.headOption.map(_.toInt).getOrElse(10)
       val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val out = args.lift(2).getOrElse(s"/tmp/graft_scale_x$factor")
-      buildScratch(spark, factor, src, out)
-      timeAll(spark, out, factor)
+      val names = if (args.length > 2) args.drop(2).toSeq else heavy
+      timeAll(spark, Sessions.replica(spark, src, factor), factor, names)
       spark.stop()
     }
   }

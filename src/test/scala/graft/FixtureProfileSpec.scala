@@ -6,7 +6,7 @@ import graft.operators.{SsbVerbatim, TpcdsVerbatim, TpchVerbatim}
   * VERDICT r12 #6): all three verbatim fixture sessions floor shuffle
   * partitions at 8 when their largest fact is micro-scale, and the floor
   * self-releases above Sessions.smallFactRows so the scaled verbatim runs
-  * (tools.TpchScaleBench) keep cores-wide parallelism. */
+  * (tools.ScaleBench) keep cores-wide parallelism. */
 class FixtureProfileSpec extends GraftSpecBase {
 
   private val key = "spark.sql.shuffle.partitions"

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.tools.{PlanDump, PlanSignature, ScaleSmoke}
 
@@ -17,7 +17,7 @@ import graft.tools.{PlanDump, PlanSignature, ScaleSmoke}
   */
 class PlanStabilitySpec extends GraftSpecBase {
 
-  private val sigDir = Paths.get("src/test/resources/plan-signatures")
+  private val sigDir = PlanSignature.pinDir
   private val regen = sys.env.contains("GRAFT_REGEN_PLAN_SIGS")
 
   // Pin set = the PLANS.md headline queries ∪ every scale-gate heavy
