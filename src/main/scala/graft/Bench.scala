@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line of per-query wall times at the driver's
   * scale factor. Results are fully materialized through a noop sink (count()
@@ -8,9 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[${Engine.cpus}]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     // JVM/codegen/file-index warmup so the first measured query isn't
     // charged for session spin-up
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -28,7 +25,7 @@ object Bench {
     // committed artifact showed 2-5x inflation on a handful of queries that
     // no isolated re-run reproduced). clearCache between runs releases
     // per-query persisted intermediates, not the JIT state.
-    val iters = sys.env.get("SPARK_GRAFT_BENCH_ITERS").map(_.toInt).getOrElse(3)
+    val iters = 3
     // NaN marks a crashed iteration (ADVICE r3: a fast-fail must not enter
     // the artifact as if the query ran); a query with no successful
     // iteration is reported under "failed", not in the timing map.

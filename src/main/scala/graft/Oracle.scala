@@ -62,7 +62,7 @@ object QueryDef {
   * lossless — and convert the exact integer to double at the very end.
   * This is how native engines implement decimal aggregation (int64/int128
   * fixed-point); in Spark it keeps the hash-agg on the primitive-long codegen
-  * fast path, ~2x decimal(18,2) accumulation (tools/AggProbe at sf0.1).
+  * fast path, ~2x decimal(18,2) accumulation (measured at sf0.1).
   * Averages are the exact cent sum, then the identical IEEE double ops
   * (/100.0, /count) on both engines.
   *

@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.{FileSystemException, Files, Path, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 
+import graft.operators.Corpus
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit}
@@ -24,34 +25,11 @@ import org.apache.spark.sql.functions.{col, expr, lit}
   */
 object Sessions {
 
-  /** A verbatim corpus's micro-schema: `fixtures` (name → SQL over the
-    * `tpch_<t>` views of `baseTables`) are materialized once per (sf dir,
-    * fixture-SQL version). `largestFact` sizes the session profile
-    * ([[tuneFixture]]); `joinReorder` is the corpus's CBO join-reorder
-    * setting. */
-  final case class Corpus(tag: String, baseTables: Seq[String],
-      fixtures: Seq[(String, String)], largestFact: String,
-      joinReorder: Boolean) {
-    /** content-versioned by the fixture SQL, so stale scratch dirs are
-      * never reused */
-    private def version(dir: String): String =
-      Sessions.version(dir + fixtures.map(_._2).mkString(""))
-
-    /** Where the micro-schema for `dir` is materialized — the scaled-run
-      * DuckDB twin (tools/scale_duck.py) reads the SAME parquet, so both
-      * engines are timed over byte-identical tables. */
-    def root(dir: String): File = scratch(s"graft_${tag}_fixture_${version(dir)}")
-
-    /** the catalog database the fixture tables live in (the version suffix
-      * is normalized away by [[graft.tools.PlanSignature.normalize]]) */
-    def database(dir: String): String = s"graft_${tag}_${version(dir)}"
-  }
-
-  private def version(key: String): String =
+  private[graft] def version(key: String): String =
     java.util.UUID.nameUUIDFromBytes(key.getBytes("UTF-8"))
       .toString.replace("-", "").take(16)
 
-  private def scratch(name: String): File =
+  private[graft] def scratch(name: String): File =
     new File(System.getProperty("java.io.tmpdir"), name)
 
   /** The statement each corpus's DuckDB oracle opens with. DuckDB defaults

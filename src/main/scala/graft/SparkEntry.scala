@@ -40,9 +40,7 @@ object SparkEntry {
       operators.GoldenCore.all ++
       operators.GoldenAnsi.all ++
       operators.GoldenSubq.all ++
-      operators.TpcdsVerbatim.all ++
-      operators.TpchVerbatim.all ++
-      operators.SsbVerbatim.all ++
+      operators.Verbatim.all.flatMap(_.all) ++
       operators.Tpch.all ++
       operators.TpchFull.all ++
       operators.Ssb.all ++

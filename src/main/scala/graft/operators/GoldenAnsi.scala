@@ -17,13 +17,5 @@ object GoldenAnsi {
     "higher-order-functions", "interval", "literals", "map",
     "parse-schema-string", "string-functions")
 
-  private def slug(base: String): String =
-    base.replaceAll("([A-Z])", "_$1").toLowerCase.replace("-", "_")
-
-  def queryFor(base: String): QueryDef = QueryDef(
-    s"q_golden_ansi_${slug(base)}",
-    (spark, _) => GoldenPg.runMatrix(spark, s"ansi_$base"),
-    Some(GoldenCoercion.oracleFor(s"ansi_$base")))
-
-  lazy val all: Seq[QueryDef] = bases.map(queryFor)
+  lazy val all: Seq[QueryDef] = GoldenPg.family("ansi", bases)
 }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.io.Source
-
 import graft.{QueryDef, Sessions}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -40,12 +38,6 @@ object GoldenCoercion {
     "mapconcat", "promoteStrings", "stringCastAndExpressions",
     "widenSetOperationTypes", "windowFrameCoercion")
 
-  private def resource(path: String): String = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"missing resource $path")
-    try Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
   /** One parsed statement of a battery file, in reference file order.
     * kind = "setup" | "tc" | "err:<Spark 4.1 exception class>". */
   final case class Stmt(id: String, kind: String, sql: String)
@@ -54,7 +46,7 @@ object GoldenCoercion {
     * some batteries flip a SET mid-file (concat's concatBinaryAsString),
     * so consumers must replay the stream exactly as the reference does. */
   def loadAll(base: String): (Int, Seq[Stmt]) = {
-    val lines = resource(s"/golden-coercion/$base.tsv").split('\n')
+    val lines = Verbatim.resource(s"/golden-coercion/$base.tsv").split('\n')
       .filter(_.nonEmpty)
     val header = lines.head
     val width = "width=(\\d+)".r.findFirstMatchIn(header).get.group(1).toInt
@@ -70,7 +62,7 @@ object GoldenCoercion {
   /** Declared statement totals from the tsv header, for the inventory
     * pin: (total, valueTcs, errorTcs). */
   def declaredCounts(base: String): (Int, Int, Int) = {
-    val h = resource(s"/golden-coercion/$base.tsv").split('\n').head
+    val h = Verbatim.resource(s"/golden-coercion/$base.tsv").split('\n').head
     def f(k: String) = s"$k=(\\d+)".r.findFirstMatchIn(h).get.group(1).toInt
     (f("total"), f("value_tcs"), f("error_tcs"))
   }
@@ -264,7 +256,7 @@ object GoldenCoercion {
 
   /** literal DuckDB oracle text for a battery (shared with GoldenPg) */
   def oracleFor(base: String): String =
-    resource(s"/golden-coercion/$base.oracle.sql")
+    Verbatim.resource(s"/golden-coercion/$base.oracle.sql")
 
   def queryFor(base: String): QueryDef = QueryDef(
     s"q_golden_coerce_${slug(base).stripPrefix("_")}",

@@ -36,13 +36,5 @@ object GoldenCore {
     "regexp-functions", "struct", "table-valued-functions",
     "tablesample-negative", "timezone", "udaf", "union")
 
-  private def slug(base: String): String =
-    base.replaceAll("([A-Z])", "_$1").toLowerCase.replace("-", "_")
-
-  def queryFor(base: String): QueryDef = QueryDef(
-    s"q_golden_core_${slug(base)}",
-    (spark, _) => GoldenPg.runMatrix(spark, s"core_$base"),
-    Some(GoldenCoercion.oracleFor(s"core_$base")))
-
-  lazy val all: Seq[QueryDef] = bases.map(queryFor)
+  lazy val all: Seq[QueryDef] = GoldenPg.family("core", bases)
 }

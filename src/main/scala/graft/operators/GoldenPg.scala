@@ -1,7 +1,6 @@
 package graft.operators
 
 import scala.collection.mutable
-import scala.io.Source
 
 import graft.{QueryDef, Sessions}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -195,13 +194,9 @@ object GoldenPg {
   // ---------------------------------------------------------------------
   // fixtures
 
-  private def readTsv(path: String): Seq[Array[String]] = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"missing resource $path")
-    try Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map(_.split('\t')).toList
-    finally in.close()
-  }
+  private def readTsv(path: String): Seq[Array[String]] =
+    Verbatim.resource(path).split('\n').toList
+      .filter(_.nonEmpty).map(_.split('\t'))
 
   private val onekSchema: Seq[(String, DataType)] = Seq(
     "unique1" -> IntegerType, "unique2" -> IntegerType,
@@ -299,9 +294,8 @@ object GoldenPg {
     "with")
 
   /** shared replay for any battery whose setups may carry table DML —
-    * used by the pg_ and core_ families (resourceBase carries the
-    * prefix) */
-  private[operators] def runMatrix(outer: SparkSession,
+    * used by every [[family]] (resourceBase carries the prefix) */
+  private def runMatrix(outer: SparkSession,
       resourceBase: String): DataFrame = {
     val spark = Sessions.battery(outer)
     registerFixtures(spark)
@@ -317,12 +311,20 @@ object GoldenPg {
       GoldenCoercion.matrixSchema(width))
   }
 
-  def queryFor(base: String): QueryDef = QueryDef(
-    s"q_golden_pg_$base",
-    (spark, _) => runMatrix(spark, s"pg_$base"),
-    Some(GoldenCoercion.oracleFor(s"pg_$base")))
+  /** The registry rows of one battery family (pg, core, ansi, subq): row
+    * `q_golden_<prefix>_<slug>` replays resource `<prefix>_<base>` through
+    * [[runMatrix]] against its literal oracle. The slug snake-cases the
+    * reference's camelCase and hyphenated file names (pg's bases are
+    * already snake_case). */
+  def family(prefix: String, bases: Seq[String]): Seq[QueryDef] =
+    bases.map { base =>
+      val slug = base.replaceAll("([A-Z])", "_$1").toLowerCase.replace("-", "_")
+      QueryDef(s"q_golden_${prefix}_$slug",
+        (spark, _) => runMatrix(spark, s"${prefix}_$base"),
+        Some(GoldenCoercion.oracleFor(s"${prefix}_$base")))
+    }
 
   // lazy: the probe tool uses executeSetup/registerFixtures BEFORE the
   // oracle resources exist (they are generated from the probe's output)
-  lazy val all: Seq[QueryDef] = bases.map(queryFor)
+  lazy val all: Seq[QueryDef] = family("pg", bases)
 }

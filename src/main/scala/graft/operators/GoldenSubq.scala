@@ -28,10 +28,5 @@ object GoldenSubq {
     "scalar-subquery-predicate", "scalar-subquery-select", "simple-in",
     "subq-input-typecheck")
 
-  def queryFor(base: String): QueryDef = QueryDef(
-    s"q_golden_subq_${base.replace("-", "_")}",
-    (spark, _) => GoldenPg.runMatrix(spark, s"subq_$base"),
-    Some(GoldenCoercion.oracleFor(s"subq_$base")))
-
-  lazy val all: Seq[QueryDef] = bases.map(queryFor)
+  lazy val all: Seq[QueryDef] = GoldenPg.family("subq", bases)
 }

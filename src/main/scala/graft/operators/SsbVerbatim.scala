@@ -1,15 +1,10 @@
 package graft.operators
 
-import scala.io.Source
-
-import graft.{QueryDef, Sessions}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** VERBATIM Star-Schema-Benchmark query texts (reference corpus:
   * native-sql-engine/core/src/test/resources/ssb/1.1.sql..4.3.sql, runner
   * .../tpc/ssb/) — all 13 files run END TO END, character for character,
   * over a denormalized lineorder star derived from the base parquet, the
-  * same [[TpcdsVerbatim]]/[[TpchVerbatim]] micro-schema mechanism.
+  * same [[Corpus]] micro-schema mechanism as [[TpcdsVerbatim]]/[[TpchVerbatim]].
   *
   * The adapted `q_ssb_*` rows (operators/Ssb.scala) stay the scale-shape
   * set; this is the "run the reference's exact SSB files" surface.
@@ -79,7 +74,7 @@ object SsbVerbatim {
   private val cityDigit: String =
     "CASE CAST(floor(k / 25) AS INT) % 2 WHEN 0 THEN '1' ELSE '5' END"
 
-  val fixtures: Seq[(String, String)] = Seq(
+  private val fixtures: Seq[(String, String)] = Seq(
     "date" ->
       s"""SELECT CAST(year(dt) * 10000 + month(dt) * 100 + day(dt) AS INT)
                   AS d_datekey,
@@ -196,44 +191,22 @@ object SsbVerbatim {
                             % 76 AS INT) AS dt2
                FROM tpch_lineitem) b""")
 
-  private val baseTables = Seq("orders", "lineitem")
-
-  /** the denormalized star, lineorder its fact, with CBO join reordering */
-  val corpus: Sessions.Corpus = Sessions.Corpus("ssbv", baseTables,
-    fixtures, "lineorder", joinReorder = true)
-
-  val queryNames: Seq[String] = Seq("1.1", "1.2", "1.3", "2.1", "2.2",
-    "2.3", "3.1", "3.2", "3.3", "3.4", "4.1", "4.2", "4.3")
-
-  private def resource(path: String): String = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"missing resource $path")
-    try Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
-  def queryText(q: String): String = resource(s"/ssb-verbatim/$q.sql")
-
-  /** DuckDB oracle: fixture CTE prefix + the verbatim text (no SSB file
-    * opens with WITH or a comment, and none emits a dialect-unstable
-    * column — the unaliased `sum(lo_revenue)` auto-names identically). */
-  def oracleFor(q: String): String = {
-    val prefix =
-      baseTables.map(t => s"tpch_$t AS (SELECT * FROM main.$t)") ++
-        fixtures.map { case (n, sql) => s""""$n" AS ($sql)""" }
-    s"${Sessions.duckNullOrder}WITH ${prefix.mkString(",\n")}\n${oracleBody(q)}"
-  }
-
-  /** The oracle statement without the fixture prefix, for DuckDB reading
-    * the MATERIALIZED fixture parquet (tools/scale_duck.py). */
-  def oracleBody(q: String): String = queryText(q).trim
-
-  def run(outer: SparkSession, dir: String, q: String): DataFrame =
-    Sessions.fixture(outer, dir, corpus).sql(queryText(q))
-
-  def queryFor(q: String): QueryDef = QueryDef(
-    s"q_ssb_verbatim_${q.replace(".", "_")}",
-    (spark, dir) => run(spark, dir, q),
-    Some(oracleFor(q)))
-
-  lazy val all: Seq[QueryDef] = queryNames.map(queryFor)
+  /** the denormalized star from orders and lineitem, lineorder its fact,
+    * with CBO join reordering. No file opens with WITH or a comment, and
+    * none emits a dialect-unstable column (the unaliased `sum(lo_revenue)`
+    * auto-names identically), so no shim applies. */
+  val corpus: Corpus = Corpus(
+    name = "ssb",
+    tag = "ssbv",
+    queryNames = Seq("1.1", "1.2", "1.3", "2.1", "2.2", "2.3", "3.1", "3.2",
+      "3.3", "3.4", "4.1", "4.2", "4.3"),
+    baseTables = Seq("orders", "lineitem"),
+    fixtures = fixtures,
+    largestFact = "lineorder",
+    joinReorder = true,
+    renames = Map.empty,
+    oracleRenames = Set.empty,
+    dualRound = Map.empty,
+    oracleCasts = Map.empty,
+    bodyFixes = Map.empty)
 }

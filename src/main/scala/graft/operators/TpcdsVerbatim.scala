@@ -1,10 +1,5 @@
 package graft.operators
 
-import scala.io.Source
-
-import graft.{QueryDef, Sessions}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** VERBATIM TPC-DS query texts over a derived micro-schema — the round-10
   * upgrade of [[TpcdsShapes]] (which pins the COMPOSITE planner shapes
   * ds1–ds99 exercise), widened in round 11 from 14 to the full
@@ -64,7 +59,7 @@ object TpcdsVerbatim {
   /** (view name, portable defining SQL) in dependency order; `tpch_*`
     * aliases keep the oracle's WITH-prefix from self-shadowing the base
     * parquet tables. */
-  val fixtures: Seq[(String, String)] = Seq(
+  private val fixtures: Seq[(String, String)] = Seq(
     "date_dim" ->
       """SELECT i AS d_date_sk,
                 CAST(1998 + (i % 5) AS INT) AS d_year,
@@ -713,17 +708,6 @@ object TpcdsVerbatim {
                        AS INT) AS w FROM tpch_orders) nw
                WHERE d <= 210 AND i <= 4 AND w <= 2) b""")
 
-  /** TPC-H base tables the fixture derives from */
-  private val baseTables =
-    Seq("orders", "lineitem", "part", "supplier")
-
-  /** The fact fixtures are lineitem-linear; materializing them makes the
-    * verbatim queries scan the micro-schema exactly how TPC-DS is run
-    * against real tables, with CBO join reordering on. store_sales is the
-    * largest fact. */
-  val corpus: Sessions.Corpus = Sessions.Corpus("tpcds", baseTables,
-    fixtures, "store_sales", joinReorder = true)
-
   /** round-10 set */
   private val wave1: Seq[String] = Seq("q1", "q3", "q6", "q19", "q41",
     "q42", "q52", "q55", "q65", "q68", "q73", "q79", "q88", "q96")
@@ -794,16 +778,6 @@ object TpcdsVerbatim {
     * sums) recompute identically on both engines — measures stay
     * integer-valued doubles per the fixture determinism rules. */
   private val wave4: Seq[String] = Seq("q34")
-
-  val queryNames: Seq[String] = wave1 ++ wave2 ++ wave3 ++ wave4
-
-  private def resource(path: String): String = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"missing resource $path")
-    try Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
-  def queryText(q: String): String = resource(s"/tpcds-verbatim/$q.sql")
 
   /** Comparator-rendering shims (see the scaladoc above): unaliased
     * aggregates whose AUTO-NAMES differ between engines — the verbatim
@@ -878,79 +852,44 @@ object TpcdsVerbatim {
       "q51" -> Seq("d_date" -> "VARCHAR"))
   }
 
-  /** DuckDB oracle: the fixture CTE prefix merged with the verbatim query
-    * (a leading WITH in the query folds into the prefix's clause list).
-    * Backtick identifier quotes (Spark dialect) become ANSI double quotes
-    * on this side only. */
-  def oracleFor(q: String): String =
-    Sessions.duckNullOrder + oracleSql(q, withFixturePrefix = true)
+  /** Oracle-side text fixes: literal (from → to) rewrites applied to the
+    * verbatim body on the DuckDB side only, where DuckDB's binder or
+    * grammar rejects the Spark-dialect spelling. */
+  private val bodyFixes: Map[String, Seq[(String, String)]] = Map(
+    "q58" -> Seq("ORDER BY item_id" -> "ORDER BY ss_items.item_id"),
+    "q54" -> Seq(
+      "cast((revenue / 50) AS INT)" -> "cast(floor(revenue / 50) AS INT)"),
+    // bare d_week_seq is ambiguous to DuckDB's binder (d1/d3 in scope)
+    "q72" -> Seq(
+      "w_warehouse_name, d_week_seq" -> "w_warehouse_name, d1.d_week_seq"),
+    // `returns` is a DuckDB reserved word; quote the alias (same
+    // column NAME either way, so the comparator is unaffected)
+    "q77" -> Seq(
+      // order matters: quote the standalone alias forms before the
+      // coalesce-inner references they contain
+      "coalesce(returns, 0) returns," ->
+        "coalesce(returns, 0) \"returns\",",
+      "AS returns," -> "AS \"returns\",",
+      "sum(returns)" -> "sum(\"returns\")",
+      "coalesce(returns, 0)" -> "coalesce(\"returns\", 0)",
+      "     returns,\n" -> "     \"returns\",\n"))
 
-  /** Oracle statement WITHOUT the fixture-derivation WITH prefix — for runs
-    * where DuckDB reads the MATERIALIZED fixture parquet directly (the
-    * scaled twin, tools/scale_duck.py, which sets the null order once per
-    * connection), so both engines scan byte-identical tables. Same body
-    * fixes / rename-cast shims as [[oracleFor]]. */
-  def oracleBody(q: String): String = oracleSql(q, withFixturePrefix = false)
-
-  private def oracleSql(q: String, withFixturePrefix: Boolean): String = {
-    val prefix = baseTables.map(t => s"tpch_$t AS (SELECT * FROM $t)") ++
-      fixtures.map { case (n, sql) => s"$n AS ($sql)" }
-    val bodyFixes: Map[String, Seq[(String, String)]] = Map(
-      "q58" -> Seq("ORDER BY item_id" -> "ORDER BY ss_items.item_id"),
-      // bare d_week_seq is ambiguous to DuckDB's binder (d1/d3 in scope)
-      "q54" -> Seq(
-        "cast((revenue / 50) AS INT)" -> "cast(floor(revenue / 50) AS INT)"),
-      "q72" -> Seq(
-        "w_warehouse_name, d_week_seq" -> "w_warehouse_name, d1.d_week_seq"),
-      // `returns` is a DuckDB reserved word; quote the alias (same
-      // column NAME either way, so the comparator is unaffected)
-      "q77" -> Seq(
-        // order matters: quote the standalone alias forms before the
-        // coalesce-inner references they contain
-        "coalesce(returns, 0) returns," ->
-          "coalesce(returns, 0) \"returns\",",
-        "AS returns," -> "AS \"returns\",",
-        "sum(returns)" -> "sum(\"returns\")",
-        "coalesce(returns, 0)" -> "coalesce(\"returns\", 0)",
-        "     returns,\n" -> "     \"returns\",\n"))
-    val body0 = queryText(q).trim.replace('`', '"')
-    val body = bodyFixes.getOrElse(q, Nil)
-      .foldLeft(body0) { case (b, (from, to)) => b.replace(from, to) }
-    val core =
-      if (!withFixturePrefix) body
-      else if (body.toUpperCase.startsWith("WITH "))
-        s"WITH ${prefix.mkString(",\n")},\n${body.drop(5)}"
-      else
-        s"WITH ${prefix.mkString(",\n")}\n$body"
-    val renamed =
-      if (oracleRenames.contains(q))
-        s"SELECT * FROM (\n$core\n) AS graft_renamed(" +
-          renames(q).map(n => s"\"$n\"").mkString(", ") + ")"
-      else core
-    val replaces =
-      oracleCasts.getOrElse(q, Nil)
-        .map { case (c, t) => s"""CAST("$c" AS $t) AS "$c"""" } ++
-        dualRound.getOrElse(q, Nil)
-          .map(c => s"""CAST(round("$c", 4) AS DOUBLE) AS "$c"""")
-    if (replaces.isEmpty) renamed
-    else s"SELECT * REPLACE (${replaces.mkString(", ")}) " +
-      s"FROM (\n$renamed\n) graft_cast_shim"
-  }
-
-  /** Run the verbatim text over the (cached) fixture session. */
-  def run(outer: SparkSession, dir: String, q: String): DataFrame = {
-    val df = Sessions.fixture(outer, dir, corpus).sql(queryText(q))
-    val named = renames.get(q).map(ns => df.toDF(ns: _*)).getOrElse(df)
-    dualRound.getOrElse(q, Nil).foldLeft(named) { (d, c) =>
-      d.withColumn(c, org.apache.spark.sql.functions
-        .round(org.apache.spark.sql.functions.col(c), 4).cast("double"))
-    }
-  }
-
-  def queryFor(q: String): QueryDef = QueryDef(
-    s"q_tpcds_verbatim_$q",
-    (spark, dir) => run(spark, dir, q),
-    Some(oracleFor(q)))
-
-  lazy val all: Seq[QueryDef] = queryNames.map(queryFor)
+  /** The fixtures derive from the TPC-H orders, lineitem, part and
+    * supplier tables. The fact fixtures are lineitem-linear; materializing
+    * them makes the verbatim queries scan the micro-schema exactly how
+    * TPC-DS is run against real tables, with CBO join reordering on.
+    * store_sales is the largest fact. */
+  val corpus: Corpus = Corpus(
+    name = "tpcds",
+    tag = "tpcds",
+    queryNames = wave1 ++ wave2 ++ wave3 ++ wave4,
+    baseTables = Seq("orders", "lineitem", "part", "supplier"),
+    fixtures = fixtures,
+    largestFact = "store_sales",
+    joinReorder = true,
+    renames = renames,
+    oracleRenames = oracleRenames,
+    dualRound = dualRound,
+    oracleCasts = oracleCasts,
+    bodyFixes = bodyFixes)
 }

@@ -1,16 +1,11 @@
 package graft.operators
 
-import scala.io.Source
-
-import graft.{QueryDef, Sessions}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** VERBATIM TPC-H query texts — the reference's PRIMARY benchmark corpus
   * (reference: native-sql-engine/core/src/test/resources/tpch/q1.sql..
   * q22.sql, runner core/src/test/scala/.../tpc/h/TPCHSuite.scala, CI
   * workflow .github/workflows/tpch.yml:62-83) — run END TO END, character
-  * for character, over a derived micro-schema, exactly the round-11
-  * [[TpcdsVerbatim]] mechanism extended to the full 8-table TPC-H schema.
+  * for character, over a derived micro-schema: the [[Corpus]] mechanism
+  * over the full 8-table TPC-H schema.
   *
   * The existing [[Tpch]]/[[TpchFull]] rows keep the ADAPTED texts (they
   * exercise the same planner shapes against the raw fixture parquet and
@@ -18,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * their exact queries" surface: all 22 files ship unmodified under
   * resources/tpch-verbatim/ and every one is a green CORRECTNESS row.
   *
-  * Fixture mechanics (same contract as [[TpcdsVerbatim]]): each TPC-H
+  * Fixture mechanics (the [[Corpus]] contract): each TPC-H
   * table is ONE dialect-portable SQL text over `tpch_*`-aliased base
   * parquet tables — the same text registers the Spark views AND becomes a
   * WITH-prefix on the DuckDB oracle, so both engines derive byte-identical
@@ -61,7 +56,7 @@ object TpchVerbatim {
   /** (view name, portable defining SQL) — each a pure function of the
     * `tpch_*` base-table aliases (no fixture-to-fixture references, so the
     * same strings materialize on Spark and prefix the DuckDB oracle). */
-  val fixtures: Seq[(String, String)] = Seq(
+  private val fixtures: Seq[(String, String)] = Seq(
     "region" ->
       """SELECT CAST(k - 1 AS INT) AS r_regionkey,
                 CASE k - 1 WHEN 0 THEN 'AFRICA' WHEN 1 THEN 'AMERICA'
@@ -271,33 +266,6 @@ object TpchVerbatim {
                         + CAST((l_orderkey * 257) % 2406 AS INT) AS od
                FROM tpch_lineitem) b""")
 
-  /** base parquet tables the fixture derives from */
-  private val baseTables = Seq("orders", "lineitem")
-
-  /** lineitem is the schema's largest fact. CBO join REORDERING is off
-    * for this corpus (stats-based join STRATEGY sizing via cbo.enabled
-    * stays on): measured at x30/x100 (tools.ScaleBench, min over >=2 runs),
-    * the reorderer's row-count estimates over the replicated fixture
-    * invert q5 into a suppliers-x-customers-per-nation explosion (5.3 s vs
-    * 2.0 s at x100) and double q8/q9 at x30 (1.60/1.62 s vs 0.79/0.88 s);
-    * at bench scale the section reads 6.2-7.3 s vs 8.2-9.2 s across 5
-    * interleaved runs. The texts' written join order (the spec's own) is
-    * the better plan at every measured factor. TPC-DS/SSB keep reordering
-    * on - measured there, the A/B is inside the noise band and their pins
-    * predate r13. */
-  val corpus: Sessions.Corpus = Sessions.Corpus("tpchv", baseTables,
-    fixtures, "lineitem", joinReorder = false)
-
-  val queryNames: Seq[String] = (1 to 22).map(i => s"q$i")
-
-  private def resource(path: String): String = {
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"missing resource $path")
-    try Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
-  def queryText(q: String): String = resource(s"/tpch-verbatim/$q.sql")
-
   /** Oracle-side `SELECT * REPLACE` casts (see object scaladoc): applied
     * around the untouched verbatim text on the DuckDB side only. */
   private val oracleCasts: Map[String, Seq[(String, String)]] = Map(
@@ -308,52 +276,29 @@ object TpchVerbatim {
     "q3" -> Seq("o_orderdate" -> "VARCHAR"),
     "q18" -> Seq("o_orderdate" -> "VARCHAR"))
 
-  /** DuckDB oracle: fixture CTE prefix merged with the verbatim text.
-    * The TPC-H files all open with a `-- using default substitutions`
-    * comment line; it is dropped on the ORACLE side only (a leading WITH
-    * must fold into the prefix's clause list — q15). */
-  def oracleFor(q: String): String =
-    Sessions.duckNullOrder + oracleSql(q, withFixturePrefix = true)
-
-  /** The oracle statement without the fixture prefix, for DuckDB reading
-    * the MATERIALIZED fixture parquet (tools/scale_duck.py). */
-  def oracleBody(q: String): String = oracleSql(q, withFixturePrefix = false)
-
-  private def oracleSql(q: String, withFixturePrefix: Boolean): String = {
-    // `main.` qualification: the fixture CTE names ARE the base view names
-    // (TPC-H tables shadow the raw parquet by design), so the unqualified
-    // spelling TpcdsVerbatim uses would bind the prefix's own later CTEs
-    // (circular); the schema-qualified name bypasses CTE resolution and
-    // reads the driver's parquet views
-    val prefix = baseTables.map(t => s"tpch_$t AS (SELECT * FROM main.$t)") ++
-      fixtures.map { case (n, sql) => s"$n AS ($sql)" }
-    val body = queryText(q).linesIterator
-      .dropWhile(l => l.trim.isEmpty || l.trim.startsWith("--"))
-      .mkString("\n").trim
-    val core =
-      if (!withFixturePrefix) body
-      else if (body.toUpperCase.startsWith("WITH "))
-        s"WITH ${prefix.mkString(",\n")},\n${body.drop(5)}"
-      else
-        s"WITH ${prefix.mkString(",\n")}\n$body"
-    oracleCasts.get(q) match {
-      case Some(casts) =>
-        val rep = casts
-          .map { case (c, t) => s"""CAST("$c" AS $t) AS "$c"""" }
-          .mkString(", ")
-        s"SELECT * REPLACE ($rep) FROM (\n$core\n) graft_cast_shim"
-      case None => core
-    }
-  }
-
-  /** Run the verbatim text over the (cached) fixture session. */
-  def run(outer: SparkSession, dir: String, q: String): DataFrame =
-    Sessions.fixture(outer, dir, corpus).sql(queryText(q))
-
-  def queryFor(q: String): QueryDef = QueryDef(
-    s"q_tpch_verbatim_$q",
-    (spark, dir) => run(spark, dir, q),
-    Some(oracleFor(q)))
-
-  lazy val all: Seq[QueryDef] = queryNames.map(queryFor)
+  /** Fixtures derive from orders and lineitem; lineitem is the schema's
+    * largest fact. CBO join REORDERING is off
+    * for this corpus (stats-based join STRATEGY sizing via cbo.enabled
+    * stays on): measured at x30/x100 (tools.ScaleBench, min over >=2 runs),
+    * the reorderer's row-count estimates over the replicated fixture
+    * invert q5 into a suppliers-x-customers-per-nation explosion (5.3 s vs
+    * 2.0 s at x100) and double q8/q9 at x30 (1.60/1.62 s vs 0.79/0.88 s);
+    * at bench scale the section reads 6.2-7.3 s vs 8.2-9.2 s across 5
+    * interleaved runs. The texts' written join order (the spec's own) is
+    * the better plan at every measured factor. TPC-DS/SSB keep reordering
+    * on - measured there, the A/B is inside the noise band and their pins
+    * predate r13. */
+  val corpus: Corpus = Corpus(
+    name = "tpch",
+    tag = "tpchv",
+    queryNames = (1 to 22).map(i => s"q$i"),
+    baseTables = Seq("orders", "lineitem"),
+    fixtures = fixtures,
+    largestFact = "lineitem",
+    joinReorder = false,
+    renames = Map.empty,
+    oracleRenames = Set.empty,
+    dualRound = Map.empty,
+    oracleCasts = oracleCasts,
+    bodyFixes = Map.empty)
 }

@@ -26,9 +26,7 @@ object CoercionProbe {
     // inline data follows the leaf-node slicing, which follows the core
     // count — probing at a different local[n] would pin last-ulp values
     // the runtime can't reproduce
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[${Engine.cpus}]")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session()
     // per-file conf restore: a battery's SETs must not leak into the next
     // file's probe (the runtime replay restores identically)
     args.foreach(p =>

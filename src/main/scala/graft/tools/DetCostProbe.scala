@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{Engine, Tables}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The md5-determinism tax, measured (VERDICT r6 "What's wrong" #2 guard).
@@ -30,9 +29,7 @@ object DetCostProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[${Engine.cpus}]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     graft.plans.GraftFunctions.ensureRegistered(spark)
 
     val docs = Tables(spark, dir, "documents")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{Engine, Tables}
-import org.apache.spark.sql.SparkSession
 
 /** One-shot generator for the COMMITTED multimodal blob fixture: the four
   * per-document container blobs (BMP/WAV/PNG/TIFF, shared builders in
@@ -17,9 +16,7 @@ object MmFixtureGen {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1)
       .getOrElse("src/test/resources/fixtures/mm_blobs.parquet")
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[${Engine.cpus}]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     graft.operators.Multimodal.blobFixture(Tables(spark, src, "documents"))
       .coalesce(1).write.mode("overwrite").parquet(out)
     println(s"[mm-fixture] wrote ${spark.read.parquet(out).count()} rows to $out")

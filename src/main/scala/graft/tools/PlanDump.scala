@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.{Engine, SparkEntry}
-import org.apache.spark.sql.SparkSession
 
 /** Writes docs/PLANS.md: the final (AQE-resolved) formatted physical plans
   * of the headline queries, as reviewable evidence of plan quality —
@@ -83,28 +82,9 @@ object PlanDump {
     "q_events_attribution", "q_link_best_match", "q_retr_market_basket",
     "q_mix_pipeline", "q_text_novelty")
 
-  /** The verbatim TPC-DS texts (one per TpcdsVerbatim.queryNames entry;
-    * the census lives in PORTING.md) — pinned by
-    * PlanStabilitySpec so a silent plan flip (e.g. a broadcast side swap
-    * on q65's double-agg join) fails the build, but NOT dumped into
-    * PLANS.md (95 fixture-derived plans would drown the reviewable
-    * headline set). */
-  val tpcdsVerbatim: Seq[String] =
-    graft.operators.TpcdsVerbatim.queryNames.map("q_tpcds_verbatim_" + _)
-
-  /** Round-12 verbatim corpora: the reference's primary TPC-H benchmark
-    * and the SSB star — pinned like the TPC-DS texts. */
-  val tpchVerbatim: Seq[String] =
-    graft.operators.TpchVerbatim.queryNames.map("q_tpch_verbatim_" + _)
-  val ssbVerbatim: Seq[String] =
-    graft.operators.SsbVerbatim.queryNames
-      .map(q => "q_ssb_verbatim_" + q.replace(".", "_"))
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[${Engine.cpus}]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by graft.tools.PlanDump, AQE-final)\n\n")
     sb.append(s"Scale factor dir: `$sfDir`. Regenerate: " +

@@ -1,19 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: print the join/exchange/aggregate skeleton of the final
   * (AQE-resolved) physical plan for the named registry queries.
   * `sbt "runMain graft.tools.PlanPeek q_tpch_q2 q_ssb_q2_1"`;
-  * `SPARK_GRAFT_DIR=<dir>` (e.g. a `Sessions.replica` dir) overrides the data dir.
+  * `SPARK_GRAFT_SF_DIR=<dir>` (e.g. a `Sessions.replica` dir) overrides the data dir.
   */
 object PlanPeek {
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_DIR", "/root/testdata/sf0.01")
-    val spark = graft.Engine.configure(
-      SparkSession.builder().master(s"local[${graft.Engine.cpus}]"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val spark = graft.Engine.session()
     args.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, dir)
       df.collect()

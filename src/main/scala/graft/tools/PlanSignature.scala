@@ -88,7 +88,10 @@ object PlanSignature {
     * and drowns the one diff that matters (r13: the q34 ticket lane
     * touched 103 sig files, 0 plan changes). */
   private[graft] def normalize(sig: String): String =
-    sig.replaceAll("(graft_(?:tpcds|tpchv|ssbv))_[0-9a-f]{16}", "$1_v")
+    sig.replaceAll(fixtureDb, "$1_v")
+
+  private lazy val fixtureDb =
+    graft.operators.Verbatim.all.map(_.tag).mkString("(graft_(?:", "|", "))_[0-9a-f]{16}")
 
   /** The committed pins, one `<query name>.sig` per pinned registry row
     * (PlanStabilitySpec). */

@@ -5,7 +5,6 @@ import scala.collection.mutable
 import graft.{Engine, SparkEntry}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage task count, summed and longest task time from the listener
   * bus — the one stage table [[QueryProfile]] and [[ScaleBench]] print. */
@@ -72,10 +71,8 @@ private[tools] final class StageStats extends SparkListener {
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val iters = sys.env.get("SPARK_GRAFT_PROFILE_ITERS").map(_.toInt).getOrElse(3)
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[${Engine.cpus}]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val iters = 3
+    val spark = Engine.session()
     val listener = new StageStats
     spark.sparkContext.addSparkListener(listener)
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()

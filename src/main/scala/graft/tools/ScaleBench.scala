@@ -3,8 +3,8 @@ package graft.tools
 import java.io.File
 import java.nio.file.Files
 
-import graft.{Engine, QueryDef, Sessions}
-import graft.operators.{SsbVerbatim, TpcdsVerbatim, TpchVerbatim}
+import graft.{Engine, Sessions}
+import graft.operators.Verbatim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -37,19 +37,6 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object ScaleBench {
 
-  /** A corpus as the harness runs it: its registry rows, each row's query
-    * name and its DuckDB statement over the materialized fixture. */
-  private final case class Suite(corpus: Sessions.Corpus, names: Seq[String],
-      defs: Seq[QueryDef], duckSql: String => String)
-
-  private val suites = Map(
-    "tpch" -> Suite(TpchVerbatim.corpus, TpchVerbatim.queryNames,
-      TpchVerbatim.all, TpchVerbatim.oracleBody),
-    "tpcds" -> Suite(TpcdsVerbatim.corpus, TpcdsVerbatim.queryNames,
-      TpcdsVerbatim.all, TpcdsVerbatim.oracleBody),
-    "ssb" -> Suite(SsbVerbatim.corpus, SsbVerbatim.queryNames,
-      SsbVerbatim.all, SsbVerbatim.oracleBody))
-
   /** Min-of-3 warm wall time of `df`, materialized through the noop sink
     * as graft.Bench does: count() lets column pruning skip the final
     * projection while DuckDB fetches every row. min-of-2 let a single
@@ -71,15 +58,15 @@ object ScaleBench {
     dt
   }
 
-  /** Run `corpus` over `src` replicated `factor`×; returns the JSON line. */
-  def run(spark: SparkSession, corpus: String, factor: Int, src: String): String = {
-    val suite = suites.getOrElse(corpus,
-      sys.error(s"unknown corpus $corpus (one of ${suites.keys.mkString(", ")})"))
-    val tag = s"[scale-bench $corpus x$factor]"
+  /** Run the corpus named `name` over `src` replicated `factor`×; returns
+    * the JSON line. */
+  def run(spark: SparkSession, name: String, factor: Int, src: String): String = {
+    val corpus = Verbatim(name)
+    val tag = s"[scale-bench $name x$factor]"
     val dir = Sessions.replica(spark, src, factor)
     val t0 = System.nanoTime()
-    val session = Sessions.fixture(spark, dir, suite.corpus)
-    val root = suite.corpus.root(dir)
+    val session = Sessions.fixture(spark, dir, corpus)
+    val root = corpus.root(dir)
     println(f"$tag fixture ready in ${(System.nanoTime() - t0) / 1e9}%.1fs  " +
       s"root=${root.getPath}  " +
       s"shufflePartitions=${session.conf.get("spark.sql.shuffle.partitions")}  " +
@@ -90,7 +77,7 @@ object ScaleBench {
 
     val stats = new StageStats
     spark.sparkContext.addSparkListener(stats)
-    val results = try suite.names.zip(suite.defs).map { case (q, row) =>
+    val results = try corpus.queryNames.zip(corpus.all).map { case (q, row) =>
       stats.reset()
       val df = row.run(spark, dir)
       val rows = df.collect().length // executes, so AQE finalizes the plan
@@ -99,7 +86,7 @@ object ScaleBench {
         df.queryExecution.explainString(ExplainMode.fromString("formatted")) +
           "\nstages by longest task:\n" +
           stats.table(spark.sparkContext, 12).mkString("\n") + "\n")
-      Files.writeString(new File(duckSql, s"$q.sql").toPath, suite.duckSql(q))
+      Files.writeString(new File(duckSql, s"$q.sql").toPath, corpus.oracleBody(q))
       val pin = PlanSignature.pinStatus(row.name, PlanSignature.signature(plan))
       val dt = warmSeconds(spark)(row.run(spark, dir))
       println(f"$tag $q%-6s rows=$rows%-9d $dt%.3fs  plan=$pin")
@@ -110,7 +97,7 @@ object ScaleBench {
       .map { case (pin, rs) => s"$pin=${rs.size}" }.mkString(" "))
     def obj(f: ((String, Double, Int, String)) => String): String =
       results.map(r => s""""${r._1}":${f(r)}""").mkString("{", ",", "}")
-    s"""{"metric":"${corpus}_verbatim_x$factor",""" +
+    s"""{"metric":"${name}_verbatim_x$factor",""" +
       f""""value":${results.map(_._2).sum}%.3f,"unit":"sec",""" +
       s""""factor":$factor,"fixtureRoot":"${root.getPath}",""" +
       s""""queries":${obj(r => f"${r._2}%.3f")},"rows":${obj(_._3.toString)}}"""
@@ -119,9 +106,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: ScaleBench <tpch|tpcds|ssb> <factor> [srcDir]")
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[${Engine.cpus}]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     val line = run(spark, args(0), args(1).toInt,
       args.lift(2).getOrElse("/root/testdata/sf0.1"))
     spark.stop()

@@ -286,9 +286,7 @@ object ScaleSmoke {
     }.toMap
 
   def main(args: Array[String]): Unit = {
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[${Engine.cpus}]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
 
     if (args.headOption.contains("gate")) {
       val fA = args.lift(1).map(_.toInt).getOrElse(10)

@@ -1,6 +1,11 @@
 package graft
 
-import graft.operators.{SsbVerbatim, TpcdsVerbatim, TpchVerbatim}
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import graft.operators.Verbatim
+import graft.tools.PlanSignature
 
 /** Pins the ONE small-fixture session profile (Sessions.tuneFixture,
   * VERDICT r12 #6): all three verbatim fixture sessions floor shuffle
@@ -14,16 +19,18 @@ class FixtureProfileSpec extends GraftSpecBase {
   test("all three verbatim fixture sessions use the shared 8-partition " +
     "floor at micro-fixture scale") {
     // joinReorder: the written order wins for TPC-H (TpchVerbatim.corpus)
-    val sessions = Seq(
-      ("tpch", TpchVerbatim.corpus, "false"),
-      ("tpcds", TpcdsVerbatim.corpus, "true"),
-      ("ssb", SsbVerbatim.corpus, "true"))
-    sessions.foreach { case (name, corpus, reorder) =>
+    val reorder = Map("tpch" -> "false", "tpcds" -> "true", "ssb" -> "true")
+    assert(Verbatim.all.map(_.name) == Seq("tpcds", "tpch", "ssb"))
+    Verbatim.all.foreach { corpus =>
+      val name = corpus.name
       val s = Sessions.fixture(spark, sfDir, corpus)
       assert(s.conf.get(key) == "8",
         s"$name fixture session should carry the small-fixture floor")
-      assert(s.conf.get("spark.sql.cbo.joinReorder.enabled") == reorder,
+      assert(s.conf.get("spark.sql.cbo.joinReorder.enabled") == reorder(name),
         s"$name fixture session join reordering")
+      // plan pins never see the fixture database's version hash
+      assert(PlanSignature.normalize(s"Scan ${corpus.database(sfDir)}.t\n") ==
+        s"Scan graft_${corpus.tag}_v.t\n", s"$name database is not normalized")
     }
     // and the profile is session-scoped: the outer session is untouched
     assert(spark.conf.get(key) != "8")
@@ -55,20 +62,27 @@ class FixtureProfileSpec extends GraftSpecBase {
   }
 
   test("no verbatim session re-introduces a duplicated literal conf") {
-    // guard the unification itself: each corpus file holds only its
-    // Sessions.Corpus value; Sessions.fixture owns the session
-    val files = Seq("TpchVerbatim.scala", "SsbVerbatim.scala",
-      "TpcdsVerbatim.scala")
-    files.foreach { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"src/main/scala/graft/operators/$f")),
-        "UTF-8")
-      assert(!src.contains("\"spark.sql."),
+    // guard the unification itself: each corpus file holds only data (its
+    // Corpus value); the one shared definition, Verbatim.scala, turns a
+    // corpus into registry rows and holds the operators' only
+    // Sessions.fixture call; Sessions.fixture owns the session
+    val dir = Paths.get("src/main/scala/graft/operators")
+    def src(f: String): String = Files.readString(dir.resolve(f))
+    def fixtureCalls(f: String): Int =
+      src(f).split("Sessions\\.fixture\\(", -1).length - 1
+    val s = Files.list(dir)
+    val calls = try s.iterator().asScala.map(_.getFileName.toString)
+      .map(f => f -> fixtureCalls(f)).filter(_._2 > 0).toMap
+    finally s.close()
+    assert(calls == Map("Verbatim.scala" -> 1), calls)
+    Verbatim.all.map(c => s"${c.name.capitalize}Verbatim.scala").foreach { f =>
+      val text = src(f)
+      assert(!text.contains("\"spark.sql."),
         s"$f names a session conf — the profile belongs in Sessions")
-      assert(!src.contains("conf.set"), s"$f sets a session conf")
-      assert(!src.contains("newSession()"), s"$f builds a session")
-      assert(src.contains("Sessions.fixture(outer, dir, corpus)"),
-        s"$f no longer runs through Sessions.fixture")
+      assert(!text.contains("conf.set"), s"$f sets a session conf")
+      assert(!text.contains("newSession()"), s"$f builds a session")
+      assert(!text.contains("getResourceAsStream") &&
+        !text.contains("resource("), s"$f opens a resource")
     }
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.operators.Verbatim
 import graft.tools.{PlanDump, PlanSignature, ScaleSmoke}
 
 /** Plan-stability gate (VERDICT r4 #7; reference: PlanStabilitySuite +
@@ -38,6 +39,10 @@ class PlanStabilitySpec extends GraftSpecBase {
   // scan; the broadcast-side pick between them flips run to run —
   // observed pass/fail across identical back-to-back executions). Its
   // VALUES stay oracle-checked every round.
+  // The verbatim rows are pinned in registry order (tpcds, tpch, ssb):
+  // suite order moves AQE's side picks, so it must not change. They are
+  // NOT dumped into PLANS.md (fixture-derived plans would drown the
+  // reviewable headline set).
   // q_ds_above_group_avg is the same disease on the composite-shape
   // side: it joins a per-group aggregate against the group-average
   // aggregate of the SAME scan — two similar-sized legs whose
@@ -45,8 +50,8 @@ class PlanStabilitySpec extends GraftSpecBase {
   // in isolation before and after (r11). Values stay oracle-checked
   // via its CORRECTNESS row; only the plan PIN is non-reproducible.
   private val pinned =
-    (PlanDump.headline ++ ScaleSmoke.heavy ++ PlanDump.tpcdsVerbatim ++
-      PlanDump.tpchVerbatim ++ PlanDump.ssbVerbatim)
+    (PlanDump.headline ++ ScaleSmoke.heavy ++
+      Verbatim.all.flatMap(_.all.map(_.name)))
       .distinct.filterNot(Set("op_leakage_split_deduped",
         "q_tpcds_verbatim_q23b", "q_ds_above_group_avg"))
 

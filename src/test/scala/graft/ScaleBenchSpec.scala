@@ -19,7 +19,8 @@ class ScaleBenchSpec extends GraftSpecBase {
           val Array(k, v) = kv.split(":")
           k.stripPrefix("\"").stripSuffix("\"") -> v
         }.toMap
-    val qs = SsbVerbatim.queryNames.toSet
+    val corpus = SsbVerbatim.corpus
+    val qs = corpus.queryNames.toSet
     assert(qs.size == 13)
     assert(obj("queries").keySet == qs)
     val rows = obj("rows")
@@ -35,7 +36,7 @@ class ScaleBenchSpec extends GraftSpecBase {
     qs.foreach { q =>
       val sql = java.nio.file.Files.readString(
         new File(root, s"_duck_sql/$q.sql").toPath)
-      assert(sql == SsbVerbatim.oracleBody(q) && !sql.contains(";"), q)
+      assert(sql == corpus.oracleBody(q) && !sql.contains(";"), q)
     }
   }
 }

@@ -7,7 +7,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import graft.operators.GoldenCoercion
+import graft.operators.{Corpus, GoldenCoercion}
 
 /** Derived-session ownership (graft.Sessions) and the per-session table
   * catalog (graft.Tables): live sessions never share catalog state, battery
@@ -56,10 +56,13 @@ class SessionsSpec extends GraftSpecBase {
       Tables(spark, sfDir, "lineitem").count())
   }
 
-  private val tiny = Sessions.Corpus("t", Nil, Seq(
-    "a" -> "SELECT id FROM range(5000)",
-    "b" -> "SELECT id, id % 7 AS k FROM range(3000)"),
-    "a", joinReorder = false)
+  private val tiny = Corpus(name = "t", tag = "t", queryNames = Nil,
+    baseTables = Nil, fixtures = Seq(
+      "a" -> "SELECT id FROM range(5000)",
+      "b" -> "SELECT id, id % 7 AS k FROM range(3000)"),
+    largestFact = "a", joinReorder = false, renames = Map.empty,
+    oracleRenames = Set.empty, dualRound = Map.empty, oracleCasts = Map.empty,
+    bodyFixes = Map.empty)
 
   private def assertComplete(root: File): Unit = {
     assert(new File(root, Sessions.Done).exists())

@@ -11,10 +11,11 @@ class SsbVerbatimSpec extends GraftSpecBase {
 
   private val sp = TestSpark.spark
   private val gateDir = "/root/testdata/sf0.01"
+  private val corpus = SsbVerbatim.corpus
 
   test("every verbatim SSB text returns rows at the sf0.01 gate scale") {
-    SsbVerbatim.queryNames.foreach { q =>
-      val n = SsbVerbatim.run(sp, gateDir, q).count()
+    corpus.queryNames.foreach { q =>
+      val n = corpus.run(sp, gateDir, q).count()
       assert(n > 0, s"ssb $q returned no rows — fixture no longer hits it")
     }
   }
@@ -22,9 +23,9 @@ class SsbVerbatimSpec extends GraftSpecBase {
   test("star fixture shape invariants at sf0.01") {
     val s = sp.newSession()
     Tables.registerAll(s, gateDir)
-    Seq("orders", "lineitem").foreach(t =>
+    corpus.baseTables.foreach(t =>
       s.table(t).createOrReplaceTempView(s"tpch_$t"))
-    SsbVerbatim.fixtures.foreach { case (n, sql) =>
+    corpus.fixtures.foreach { case (n, sql) =>
       s.sql(sql).createOrReplaceTempView(s"fx_$n") }
     assert(s.table("fx_date").count() == 2556)
     assert(s.table("fx_customer").count() == 1500)
@@ -60,13 +61,13 @@ class SsbVerbatimSpec extends GraftSpecBase {
   }
 
   test("the shipped texts are the reference's, character for character") {
-    val q11 = SsbVerbatim.queryText("1.1")
+    val q11 = corpus.queryText("1.1")
     assert(q11.contains("from lineorder, date") &&
       q11.contains("lo_discount between 1 and 3"))
-    val q34 = SsbVerbatim.queryText("3.4")
+    val q34 = corpus.queryText("3.4")
     assert(q34.contains("d_yearmonth = 'Dec1997'") &&
       q34.contains("c_city='UNITED KI1' or c_city='UNITED KI5'"))
-    val q43 = SsbVerbatim.queryText("4.3")
+    val q43 = corpus.queryText("4.3")
     assert(q43.contains("sum(lo_revenue-lo_supplycost) as profit1") &&
       q43.contains("p_category = 'MFGR#14'"))
   }

@@ -11,10 +11,11 @@ class TpcdsVerbatimSpec extends GraftSpecBase {
 
   private val sp = TestSpark.spark
   private val gateDir = "/root/testdata/sf0.01"
+  private val corpus = TpcdsVerbatim.corpus
 
   test("every verbatim text returns rows at the sf0.01 gate scale") {
-    val counts = TpcdsVerbatim.queryNames.map { q =>
-      q -> TpcdsVerbatim.run(sp, gateDir, q).count()
+    val counts = corpus.queryNames.map { q =>
+      q -> corpus.run(sp, gateDir, q).count()
     }
     counts.foreach { case (q, n) =>
       assert(n > 0, s"$q returned no rows — fixture no longer hits it")
@@ -24,9 +25,9 @@ class TpcdsVerbatimSpec extends GraftSpecBase {
   test("fixture tables have the designed shapes at sf0.01") {
     val s = sp.newSession()
     Tables.registerAll(s, gateDir)
-    Seq("orders", "lineitem", "part", "supplier").foreach(t =>
+    corpus.baseTables.foreach(t =>
       s.table(t).createOrReplaceTempView(s"tpch_$t"))
-    TpcdsVerbatim.fixtures.foreach { case (n, sql) =>
+    corpus.fixtures.foreach { case (n, sql) =>
       s.sql(sql).createOrReplaceTempView(n) }
     assert(s.table("date_dim").count() == 1500)
     assert(s.table("store").count() == 6)
@@ -108,12 +109,12 @@ class TpcdsVerbatimSpec extends GraftSpecBase {
   test("the shipped texts are the reference's, character for character") {
     // spot-pin three: a drifted text would silently turn 'verbatim' into
     // 'adapted'
-    val q3 = TpcdsVerbatim.queryText("q3")
+    val q3 = corpus.queryText("q3")
     assert(q3.contains("FROM date_dim dt, store_sales, item"))
     assert(q3.contains("AND item.i_manufact_id = 128"))
-    val q88 = TpcdsVerbatim.queryText("q88")
+    val q88 = corpus.queryText("q88")
     assert(q88.count(_ == ',') > 20 && q88.contains("h8_30_to_9"))
-    val q62 = TpcdsVerbatim.queryText("q62")
+    val q62 = corpus.queryText("q62")
     assert(q62.contains("AS `30 days `") &&
       q62.contains("substr(w_warehouse_name, 1, 20)"))
   }

@@ -14,10 +14,11 @@ class TpchVerbatimSpec extends GraftSpecBase {
 
   private val sp = TestSpark.spark
   private val gateDir = "/root/testdata/sf0.01"
+  private val corpus = TpchVerbatim.corpus
 
   test("every verbatim TPC-H text returns rows at the sf0.01 gate scale") {
-    TpchVerbatim.queryNames.foreach { q =>
-      val n = TpchVerbatim.run(sp, gateDir, q).count()
+    corpus.queryNames.foreach { q =>
+      val n = corpus.run(sp, gateDir, q).count()
       assert(n > 0, s"$q returned no rows — fixture no longer hits it")
     }
   }
@@ -25,9 +26,9 @@ class TpchVerbatimSpec extends GraftSpecBase {
   test("fixture tables have the designed shapes at sf0.01") {
     val s = sp.newSession()
     Tables.registerAll(s, gateDir)
-    Seq("orders", "lineitem").foreach(t =>
+    corpus.baseTables.foreach(t =>
       s.table(t).createOrReplaceTempView(s"tpch_$t"))
-    TpchVerbatim.fixtures.foreach { case (n, sql) =>
+    corpus.fixtures.foreach { case (n, sql) =>
       s.sql(sql).createOrReplaceTempView(s"fx_$n") }
     assert(s.table("fx_region").count() == 5)
     assert(s.table("fx_nation").count() == 25)
@@ -67,13 +68,13 @@ class TpchVerbatimSpec extends GraftSpecBase {
   test("the shipped texts are the reference's, character for character") {
     // spot-pin three: a drifted text would silently turn 'verbatim' into
     // 'adapted'
-    val q1 = TpchVerbatim.queryText("q1")
+    val q1 = corpus.queryText("q1")
     assert(q1.contains("date '1998-12-01' - interval '90' day"))
     assert(q1.contains("sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) as sum_charge"))
-    val q19 = TpchVerbatim.queryText("q19")
+    val q19 = corpus.queryText("q19")
     assert(q19.contains("('MED BAG', 'MED BOX', 'MED PKG', 'MED PACK')"))
     assert(q19.contains("l_shipmode in ('AIR', 'AIR REG')"))
-    val q21 = TpchVerbatim.queryText("q21")
+    val q21 = corpus.queryText("q21")
     assert(q21.contains("l3.l_receiptdate > l3.l_commitdate") &&
       q21.contains("n_name = 'SAUDI ARABIA'"))
   }
