@@ -16,14 +16,22 @@ import org.apache.spark.sql.functions._
 object Engine {
   /** the core count of the committed bench record (Bench refreshes its
     * repo artifact only at this count) */
-  val defaultCpus = "32"
+  val defaultCpus = 32
 
-  /** local parallelism: match cores, not Spark's default 200 shuffle partitions */
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+  /** local parallelism: match cores, not Spark's default 200 shuffle
+    * partitions; `SPARK_GRAFT_CPUS` overrides the default */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(parseCpus)
+    .getOrElse(defaultCpus)
 
-  def session(appName: String = "graft"): SparkSession = {
+  /** a core count: an integer >= 1 (`032` is 32), else the variable and
+    * its value are named before Spark's master-URL parser sees them */
+  private[graft] def parseCpus(v: String): Int =
+    v.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$v'"))
+
+  def session(): SparkSession = {
     val spark = configure(
-      SparkSession.builder().appName(appName).master(s"local[$cpus]"))
+      SparkSession.builder().appName("graft").master(s"local[$cpus]"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -35,11 +35,7 @@ object SparkEntry {
       operators.GoldenSqltMisc.all ++
       operators.GoldenSqltAliases.all ++
       operators.GoldenSqltLimit.all ++
-      operators.GoldenCoercion.all ++
-      operators.GoldenPg.all ++
-      operators.GoldenCore.all ++
-      operators.GoldenAnsi.all ++
-      operators.GoldenSubq.all ++
+      operators.Battery.all.flatMap(_.all) ++
       operators.Verbatim.all.flatMap(_.all) ++
       operators.Tpch.all ++
       operators.TpchFull.all ++

@@ -1,7 +1,5 @@
 package graft.operators
 
-import graft.QueryDef
-
 /** Port of the reference's `ansi/` SQLQueryTestSuite inputs (reference:
   * native-sql-engine/core/src/test/resources/sql-tests/inputs/ansi/ —
   * the batteries whose goldens were RECORDED with spark.sql.ansi.enabled
@@ -17,5 +15,5 @@ object GoldenAnsi {
     "higher-order-functions", "interval", "literals", "map",
     "parse-schema-string", "string-functions")
 
-  lazy val all: Seq[QueryDef] = GoldenPg.family("ansi", bases)
+  val battery: Battery = Battery("ansi", bases)
 }

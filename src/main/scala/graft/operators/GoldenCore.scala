@@ -1,13 +1,11 @@
 package graft.operators
 
-import graft.QueryDef
-
 /** Port of the remaining portable CORE SQLQueryTestSuite inputs
   * (reference: native-sql-engine/core/src/test/resources/sql-tests/
   * inputs/ — the top-level directory, complementing the thematic
   * `GoldenSqlt*` family ports of rounds 8-9 and this round's
-  * typeCoercion/postgreSQL directory ports). Same contract as
-  * [[GoldenPg]]: statements replay verbatim in file order through the
+  * typeCoercion/postgreSQL directory ports). Replayed as the
+  * `core` [[Battery]]: statements replay verbatim in file order through the
   * temp-view DML interpreter, value TCs pin (resolved type, stringified
   * rows) against literal probe-derived DuckDB oracles audited vs the
   * reference golden (docs/CORE_DIVERGENCES.md), error TCs pin their
@@ -36,5 +34,5 @@ object GoldenCore {
     "regexp-functions", "struct", "table-valued-functions",
     "tablesample-negative", "timezone", "udaf", "union")
 
-  lazy val all: Seq[QueryDef] = GoldenPg.family("core", bases)
+  val battery: Battery = Battery("core", bases)
 }

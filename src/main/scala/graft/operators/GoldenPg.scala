@@ -2,9 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import graft.{QueryDef, Sessions}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
 /** Port of the reference's `postgreSQL/` SQLQueryTestSuite directory
@@ -15,19 +13,19 @@ import org.apache.spark.sql.types._
   * batteries, select variants, limit, union, date/timestamp, case,
   * groupingsets, strings, interval, comments.
   *
-  * Port mechanics — same contract as [[GoldenCoercion]]: every statement
-  * replays verbatim in file order; value TCs pin `(tc, resolved type,
-  * stringified rows)` against a literal DuckDB oracle derived from the
-  * probe run and audited statement-by-statement against the reference's
-  * recorded golden output (`docs/PG_DIVERGENCES.md`); statements that
-  * raise under Spark 4.1 ANSI are pinned by exception class in
-  * GoldenPgSpec, and the inventory test pins the setup/value/error
-  * partition per file.
+  * Replayed as the `pg` [[Battery]]: every statement replays verbatim in
+  * file order; value TCs pin `(tc, resolved type, stringified rows)`
+  * against a literal DuckDB oracle derived from the probe run and audited
+  * statement-by-statement against the reference's recorded golden output
+  * (`docs/PG_DIVERGENCES.md`); statements that raise under Spark 4.1 ANSI
+  * are pinned by exception class in GoldenPgSpec, and the inventory test
+  * pins the setup/value/error partition per file.
   *
-  * What's DIFFERENT from the coercion port: these batteries mutate
-  * tables (CREATE TABLE … USING parquet, 600+ INSERTs, TRUNCATE, ALTER
-  * RENAME, DROP). Executing that DML against real managed tables would
-  * write a warehouse directory and launch a parquet job per INSERT
+  * Every battery's non-query statements run through the interpreter
+  * below, because these batteries mutate tables (CREATE TABLE … USING
+  * parquet, 600+ INSERTs, TRUNCATE, ALTER RENAME, DROP). Executing that
+  * DML against real managed tables would write a warehouse directory and
+  * launch a parquet job per INSERT
   * (~30-100 s per run for numeric.sql alone), so [[PgCatalog]] interprets
   * the DML over TEMP VIEWS instead: a "table" is a stack of DataFrames
   * (typed empty base + one frame per INSERT, values cast to the declared
@@ -277,7 +275,7 @@ object GoldenPg {
   }
 
   // ---------------------------------------------------------------------
-  // query surface (same resource format as GoldenCoercion, pg_ prefix)
+  // the pg battery
 
   /** postgreSQL file bases ported this round; `insert` and `create_view`
     * are excluded (catalog/metadata DDL semantics — DESCRIBE/SHOW-class
@@ -293,38 +291,5 @@ object GoldenPg {
     "window_part1", "window_part2", "window_part3", "window_part4",
     "with")
 
-  /** shared replay for any battery whose setups may carry table DML —
-    * used by every [[family]] (resourceBase carries the prefix) */
-  private def runMatrix(outer: SparkSession,
-      resourceBase: String): DataFrame = {
-    val spark = Sessions.battery(outer)
-    registerFixtures(spark)
-    val cat = new PgCatalog
-    val (width, stmts) = GoldenCoercion.loadAll(resourceBase)
-    val rows = GoldenCoercion.withConfRestore(spark) {
-      GoldenCoercion.collectMatrix(spark, width, stmts) {
-        s => executeSetup(spark, cat, s)
-      }
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      GoldenCoercion.matrixSchema(width))
-  }
-
-  /** The registry rows of one battery family (pg, core, ansi, subq): row
-    * `q_golden_<prefix>_<slug>` replays resource `<prefix>_<base>` through
-    * [[runMatrix]] against its literal oracle. The slug snake-cases the
-    * reference's camelCase and hyphenated file names (pg's bases are
-    * already snake_case). */
-  def family(prefix: String, bases: Seq[String]): Seq[QueryDef] =
-    bases.map { base =>
-      val slug = base.replaceAll("([A-Z])", "_$1").toLowerCase.replace("-", "_")
-      QueryDef(s"q_golden_${prefix}_$slug",
-        (spark, _) => runMatrix(spark, s"${prefix}_$base"),
-        Some(GoldenCoercion.oracleFor(s"${prefix}_$base")))
-    }
-
-  // lazy: the probe tool uses executeSetup/registerFixtures BEFORE the
-  // oracle resources exist (they are generated from the probe's output)
-  lazy val all: Seq[QueryDef] = family("pg", bases)
+  val battery: Battery = Battery("pg", bases)
 }

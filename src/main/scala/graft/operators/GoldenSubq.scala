@@ -1,7 +1,5 @@
 package graft.operators
 
-import graft.QueryDef
-
 /** VERBATIM port of the reference's entire `subquery/` SQLQueryTestSuite
   * directory (reference: native-sql-engine/core/src/test/resources/
   * sql-tests/inputs/subquery/{exists-subquery,in-subquery,
@@ -28,5 +26,5 @@ object GoldenSubq {
     "scalar-subquery-predicate", "scalar-subquery-select", "simple-in",
     "subq-input-typecheck")
 
-  lazy val all: Seq[QueryDef] = GoldenPg.family("subq", bases)
+  val battery: Battery = Battery("subq", bases)
 }

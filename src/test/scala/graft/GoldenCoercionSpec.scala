@@ -1,46 +1,22 @@
 package graft
 
 import graft.operators.GoldenCoercion
-import graft.operators.GoldenCoercion.Stmt
 
 /** Error pins + inventory for the typeCoercion/native golden port
-  * (operators/GoldenCoercion.scala). The oracle comparator can only see
-  * row sets, so the statements whose Spark 4.1 outcome is a RAISED ERROR
-  * (ANSI strictness: string→numeric cast failures, boolean/numeric
-  * comparison rejections, interval-on-integral arithmetic, …) are pinned
-  * here by exception class, replaying each battery's statement stream in
-  * file order (mid-file SETs apply to the statements after them exactly
-  * as in the reference run). The inventory test pins the partition:
-  * every statement of every file is a setup, a value TC in the oracle
-  * matrix, or an error pin — nothing drops out silently. */
-class GoldenCoercionSpec extends GraftSpecBase {
+  * (operators/GoldenCoercion.scala). Statements whose Spark 4.1 outcome is
+  * a RAISED ERROR (ANSI strictness: string→numeric cast failures,
+  * boolean/numeric comparison rejections, interval-on-integral arithmetic,
+  * …) are pinned by exception class through [[BatteryPinSpec]]. The
+  * inventory test pins the partition: every statement of every file is a
+  * setup, a value TC in the oracle matrix, or an error pin — nothing drops
+  * out silently. */
+class GoldenCoercionSpec extends BatteryPinSpec {
 
-  private val sp = TestSpark.spark
+  private val battery = GoldenCoercion.battery
 
   for (base <- GoldenCoercion.bases) {
     test(s"$base: error TCs raise the pinned exception class in order") {
-      val sess = sp.newSession() // fresh-session-per-file, no leakage
-      val (_, stmts) = GoldenCoercion.loadAll(base)
-      var checked = 0
-      GoldenCoercion.withConfRestore(sess) { stmts.foreach {
-        case Stmt(_, "setup", s) =>
-          sess.sql(s.replaceAll("(?i)CREATE TEMPORARY VIEW",
-            "CREATE OR REPLACE TEMPORARY VIEW")).collect()
-        case Stmt(id, "tc", s) =>
-          sess.sql(s).collect() // must still run clean at this stream point
-        case Stmt(id, kind, s) if kind.startsWith("skip:") =>
-          sess.sql(s).collect() // nonportable value: runs clean, not pinned
-        case Stmt(id, kind, s) =>
-          val expected = kind.stripPrefix("err:")
-          val e = intercept[Throwable] { sess.sql(s).collect() }
-          assert(e.getClass.getSimpleName == expected,
-            s"$base/$id: expected $expected, got " +
-              s"${e.getClass.getSimpleName}: ${e.getMessage.take(120)}")
-          checked += 1
-      } }
-      val (_, _, declaredErrs) = GoldenCoercion.declaredCounts(base)
-      assert(checked == declaredErrs,
-        s"$base: pinned $checked error TCs, header declares $declaredErrs")
+      pinErrors(battery, base)
     }
   }
 
@@ -59,8 +35,8 @@ class GoldenCoercionSpec extends GraftSpecBase {
       "widenSetOperationTypes" -> 145, "windowFrameCoercion" -> 25)
     assert(GoldenCoercion.bases.toSet == expectedTotals.keySet)
     for (base <- GoldenCoercion.bases) {
-      val (_, stmts) = GoldenCoercion.loadAll(base)
-      val (total, valueTcs, errorTcs) = GoldenCoercion.declaredCounts(base)
+      val (_, stmts) = battery.load(base)
+      val (total, valueTcs, errorTcs) = battery.declaredCounts(base)
       assert(total == expectedTotals(base),
         s"$base: header total $total != reference ${expectedTotals(base)}")
       assert(stmts.length == total,

@@ -1,55 +1,20 @@
 package graft
 
-import graft.operators.{GoldenAnsi, GoldenCore, GoldenCoercion, GoldenPg}
-import graft.operators.GoldenCoercion.Stmt
+import graft.operators.{GoldenAnsi, GoldenCore, GoldenSubq}
 
 /** Error pins + inventory for the core-input golden port
-  * (operators/GoldenCore.scala), same contract as GoldenPgSpec: each
-  * battery's stream replays in file order (setups through the GoldenPg
-  * interpreter, conf leaks restored), error TCs assert their pinned
-  * Spark 4.1 exception class, and the inventory pins per-file statement
-  * counts against the reference golden .out files. */
-class GoldenCoreSpec extends GraftSpecBase {
+  * (operators/GoldenCore.scala) and its ansi/ and subquery/ siblings, same
+  * contract as GoldenPgSpec: each battery's stream replays through
+  * [[BatteryPinSpec]], and the inventory pins per-file statement counts
+  * against the reference golden .out files. */
+class GoldenCoreSpec extends BatteryPinSpec {
 
-  private val sp = TestSpark.spark
-
-  private val families: Seq[(String, String)] =
-    GoldenCore.bases.map(b => ("core", b)) ++
-      GoldenAnsi.bases.map(b => ("ansi", b)) ++
-      graft.operators.GoldenSubq.bases.map(b => ("subq", b))
-
-  for ((fam, base) <- families) {
-    test(s"$fam $base: error TCs raise the pinned exception class") {
-      val sess = sp.newSession() // fresh-session-per-file, no leakage
-      GoldenPg.registerFixtures(sess)
-      val cat = new GoldenPg.PgCatalog
-      val (_, stmts) = GoldenCoercion.loadAll(s"${fam}_$base")
-      var checked = 0
-      GoldenCoercion.withConfRestore(sess) { stmts.foreach {
-        case Stmt(_, "setup", s) =>
-          GoldenPg.executeSetup(sess, cat, s)
-        case Stmt(_, "tc", s) =>
-          sess.sql(s).collect()
-        case Stmt(_, kind, s) if kind.startsWith("skip:") =>
-          sess.sql(s).collect()
-        case Stmt(id, kind, s) =>
-          val expected = kind.stripPrefix("err:")
-          val up = s.trim.toUpperCase
-          val isQuery = up.startsWith("SELECT") || up.startsWith("WITH") ||
-            up.startsWith("VALUES") || up.startsWith("TABLE") ||
-            up.startsWith("(")
-          val e = intercept[Throwable] {
-            if (isQuery) sess.sql(s).collect()
-            else GoldenPg.executeSetup(sess, cat, s)
-          }
-          assert(e.getClass.getSimpleName == expected,
-            s"$base/$id: expected $expected, got " +
-              s"${e.getClass.getSimpleName}: ${e.getMessage.take(120)}")
-          checked += 1
-      } }
-      val (_, _, declaredErrs) =
-        GoldenCoercion.declaredCounts(s"${fam}_$base")
-      assert(checked == declaredErrs)
+  for {
+    battery <- Seq(GoldenCore.battery, GoldenAnsi.battery, GoldenSubq.battery)
+    base <- battery.bases
+  } {
+    test(s"${battery.prefix} $base: error TCs raise the pinned exception class") {
+      pinErrors(battery, base)
     }
   }
 
@@ -77,7 +42,7 @@ class GoldenCoreSpec extends GraftSpecBase {
       "udaf" -> 8, "union" -> 20)
     assert(GoldenCore.bases.toSet == expectedTotals.keySet)
     for (base <- GoldenCore.bases) {
-      val (_, stmts) = GoldenCoercion.loadAll(s"core_$base")
+      val (_, stmts) = GoldenCore.battery.load(base)
       assert(stmts.length == expectedTotals(base),
         s"$base: ${stmts.length} statements, golden has " +
           s"${expectedTotals(base)}")
@@ -91,7 +56,7 @@ class GoldenCoreSpec extends GraftSpecBase {
       "string-functions" -> 36)
     assert(GoldenAnsi.bases.toSet == ansiTotals.keySet)
     for (base <- GoldenAnsi.bases) {
-      val (_, stmts) = GoldenCoercion.loadAll(s"ansi_$base")
+      val (_, stmts) = GoldenAnsi.battery.load(base)
       assert(stmts.length == ansiTotals(base),
         s"ansi/$base: ${stmts.length} statements, golden has " +
           s"${ansiTotals(base)}")
@@ -112,9 +77,9 @@ class GoldenCoreSpec extends GraftSpecBase {
       "not-in-unit-tests-single-column-literal" -> 5,
       "scalar-subquery-predicate" -> 27, "scalar-subquery-select" -> 11,
       "simple-in" -> 14, "subq-input-typecheck" -> 10)
-    assert(graft.operators.GoldenSubq.bases.toSet == subqTotals.keySet)
-    for (base <- graft.operators.GoldenSubq.bases) {
-      val (_, stmts) = GoldenCoercion.loadAll(s"subq_$base")
+    assert(GoldenSubq.bases.toSet == subqTotals.keySet)
+    for (base <- GoldenSubq.bases) {
+      val (_, stmts) = GoldenSubq.battery.load(base)
       assert(stmts.length == subqTotals(base),
         s"subquery/$base: ${stmts.length} statements, golden has " +
           s"${subqTotals(base)}")

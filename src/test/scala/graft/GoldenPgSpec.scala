@@ -1,53 +1,20 @@
 package graft
 
-import graft.operators.{GoldenCoercion, GoldenPg}
-import graft.operators.GoldenCoercion.Stmt
+import graft.operators.GoldenPg
 
 /** Error pins + inventory for the postgreSQL/ golden port
   * (operators/GoldenPg.scala), mirroring GoldenCoercionSpec: each
-  * battery's statement stream replays in file order (table DML through
-  * the GoldenPg temp-view interpreter), error TCs assert their pinned
-  * Spark 4.1 exception class, value TCs must still run clean at their
-  * stream position, and the inventory test pins the per-file statement
-  * partition against the reference's golden .out statement counts. */
-class GoldenPgSpec extends GraftSpecBase {
+  * battery's statement stream replays through [[BatteryPinSpec]] (table
+  * DML through the GoldenPg temp-view interpreter), and the inventory test
+  * pins the per-file statement partition against the reference's golden
+  * .out statement counts. */
+class GoldenPgSpec extends BatteryPinSpec {
 
   private val sp = TestSpark.spark
 
   for (base <- GoldenPg.bases) {
     test(s"pg $base: error TCs raise the pinned exception class in order") {
-      val sess = sp.newSession() // fresh-session-per-file, no leakage
-      GoldenPg.registerFixtures(sess)
-      val cat = new GoldenPg.PgCatalog
-      val (_, stmts) = GoldenCoercion.loadAll(s"pg_$base")
-      var checked = 0
-      GoldenCoercion.withConfRestore(sess) { stmts.foreach {
-        case Stmt(_, "setup", s) =>
-          GoldenPg.executeSetup(sess, cat, s)
-        case Stmt(_, "tc", s) =>
-          sess.sql(s).collect()
-        case Stmt(_, kind, s) if kind.startsWith("skip:") =>
-          sess.sql(s).collect()
-        case Stmt(id, kind, s) =>
-          val expected = kind.stripPrefix("err:")
-          // a failing DML statement (e.g. a width-mismatch INSERT whose
-          // golden outcome is an AnalysisException) must fail through the
-          // same interpreter path the runtime uses
-          val up = s.trim.toUpperCase
-          val isQuery = up.startsWith("SELECT") || up.startsWith("WITH") ||
-            up.startsWith("VALUES") || up.startsWith("TABLE") ||
-            up.startsWith("(")
-          val e = intercept[Throwable] {
-            if (isQuery) sess.sql(s).collect()
-            else GoldenPg.executeSetup(sess, cat, s)
-          }
-          assert(e.getClass.getSimpleName == expected,
-            s"$base/$id: expected $expected, got " +
-              s"${e.getClass.getSimpleName}: ${e.getMessage.take(120)}")
-          checked += 1
-      } }
-      val (_, _, declaredErrs) = GoldenCoercion.declaredCounts(s"pg_$base")
-      assert(checked == declaredErrs)
+      pinErrors(GoldenPg.battery, base)
     }
   }
 
@@ -68,7 +35,7 @@ class GoldenPgSpec extends GraftSpecBase {
       "with" -> 51)
     assert(GoldenPg.bases.toSet == expectedTotals.keySet)
     for (base <- GoldenPg.bases) {
-      val (_, stmts) = GoldenCoercion.loadAll(s"pg_$base")
+      val (_, stmts) = GoldenPg.battery.load(base)
       assert(stmts.length == expectedTotals(base),
         s"$base: ${stmts.length} statements, reference golden has " +
           s"${expectedTotals(base)}")

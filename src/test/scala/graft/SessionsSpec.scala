@@ -7,7 +7,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import graft.operators.{Corpus, GoldenCoercion}
+import graft.operators.{Corpus, GoldenCore}
 
 /** Derived-session ownership (graft.Sessions) and the per-session table
   * catalog (graft.Tables): live sessions never share catalog state, battery
@@ -33,12 +33,21 @@ class SessionsSpec extends GraftSpecBase {
     // core group-by t013: SKEWNESS over the nine-row testData view merges
     // one partial per input partition, so its last digit follows the
     // local relation's split; the oracle's value is the 32-core host's
-    val stmts = GoldenCoercion.loadAll("core_group-by")._2
+    val stmts = GoldenCore.battery.load("group-by")._2
       .map(st => st.id -> st.sql).toMap
     val s = Sessions.battery(spark)
     s.sql(stmts("t000"))
     assert(s.sql(stmts("t013")).head().getDouble(0).toString ==
       "-0.2723801058145728")
+  }
+
+  test("SPARK_GRAFT_CPUS parses to an integer of at least 1") {
+    assert(Engine.parseCpus("032") == 32)
+    Seq("abc", "0", "-1").foreach { v =>
+      val e = intercept[IllegalArgumentException](Engine.parseCpus(v))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") &&
+        e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
   }
 
   test("the battery session is fresh per call and floors partitions at 4") {

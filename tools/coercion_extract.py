@@ -3,10 +3,12 @@
 typeCoercion (and other) sql-tests directories into a statement list the
 CoercionProbe Scala tool can execute.
 
-Usage: coercion_extract.py <file.sql.out> ... -> writes
-  /tmp/coerce/<base>.stmts  (records: id \x1f sql, sep \x1e)
-  /tmp/coerce/<base>.golden.json (per-id expected schema/output from the
-                                  reference golden, for the divergence report)
+Usage: coercion_extract.py <prefix>_<base>.sql.out ... -> writes
+  /tmp/coerce/<prefix>_<base>.stmts  (records: id \x1f sql, sep \x1e)
+  /tmp/coerce/<prefix>_<base>.golden.json (per-id expected schema/output
+      from the reference golden, for the divergence report)
+Name each copied .sql.out with its battery family's prefix (coerce, pg,
+core, ansi, subq); the name carries through the probe to the resources.
 """
 import json
 import os

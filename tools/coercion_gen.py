@@ -1,10 +1,12 @@
 #!/usr/bin/env python3
 """Generate golden-coercion resources from CoercionProbe dumps.
 
-For each <base> under /tmp/coerce with .stmts/.probe/.golden.json:
-  src/main/resources/golden-coercion/<base>.tsv        value TCs + setups
-  src/main/resources/golden-coercion/<base>.errors.tsv error TCs
-  src/main/resources/golden-coercion/<base>.oracle.sql DuckDB literal oracle
+For each <prefix>_<base> under /tmp/coerce with .stmts/.probe/.golden.json
+(prefix: the graft.operators.Battery family, coerce/pg/core/ansi/subq):
+  src/main/resources/golden-coercion/<prefix>_<base>.tsv        every
+      statement in file order: setups, value TCs, skip: and err: TCs
+  src/main/resources/golden-coercion/<prefix>_<base>.oracle.sql DuckDB
+      literal oracle
 and appends a per-file section to docs/COERCION_DIVERGENCES.md comparing
 Spark 4.1 (probe) against the reference's recorded Spark 3.0 golden.
 """
@@ -149,7 +151,7 @@ def gen(base):
         literal would replay a semantics-changed statement). Tabs and
         newlines INSIDE literals are encoded reversibly (\\x1f / \\x1e —
         never present in SQL text) and decoded by the runtime's
-        GoldenCoercion.loadAll after the tab-split."""
+        Battery.load after the tab-split."""
         out, i, quote = [], 0, None
         while i < len(s):
             ch = s[i]
