@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{ParquetFileReader, metadata, util}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Session factory + table catalog for the graft engine.
   *
@@ -54,13 +59,18 @@ object Engine {
     // reader rejects; read as raw long nanos and normalize in Tables.
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    // compiled classes are cached per (classloader, code), 100 by default;
+    // one fixture_mix pass (perfbench) compiles 340-375 classes, about 245
+    // of them distinct, so at 100 every repeated pass compiled them all again
+    .config("spark.sql.codegen.cache.maxEntries", 1000)
 }
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md / FIXTURES.md).
-  * Plain `spark.read.parquet` — Spark's vectorized parquet reader with
-  * predicate pushdown and column pruning is the idiomatic equivalent of the
-  * reference's Arrow Dataset scan
+  * Spark's vectorized parquet reader with predicate pushdown and column
+  * pruning is the idiomatic equivalent of the reference's Arrow Dataset scan
   * (reference: arrow-data-source/standard/.../ArrowDataSourceV2.scala:27-41).
+  * As there, a table's schema comes from one driver-side footer read per
+  * JVM ([[footer]]) and is handed to the reader: loading starts no job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -91,9 +101,10 @@ object Tables {
       _ => load(spark, dir, name))
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = schemaOf(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
     if (name == "events" &&
-      df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      df.schema("ts").dataType == LongType)
       // nanosAsLong=true surfaces NANOS parquet as Long nanos; truncate to
       // micros and rebuild a proper timestamp column (session TZ is UTC).
       // `div` keeps the arithmetic integral — `/` would detour through
@@ -129,25 +140,42 @@ object Tables {
     "documents" -> Seq("doc_id"),
     "embeddings" -> Seq("vec_id"))
 
-  private val rgCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  /** One footer read per data file per JVM, keyed by the file's status so
+    * a file rewritten at the same path is read again. Schema inference
+    * would start a Spark job in every session to read the same footer. */
+  private val footers =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), metadata.ParquetMetadata]()
 
-  private def rowGroupCount(spark: SparkSession, path: String): Int =
-    rgCounts.computeIfAbsent(path, _ => {
-      val conf = spark.sessionState.newHadoopConf()
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(conf)
-      val files =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).filter(f =>
-            f.isFile && !f.getPath.getName.startsWith("_"))
-        else Array(fs.getFileStatus(p))
-      files.map { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-        try r.getRowGroups.size finally r.close()
-      }.sum
+  private def footer(conf: Configuration, f: FileStatus): metadata.ParquetMetadata =
+    footers.computeIfAbsent((f.getPath.toString, f.getLen, f.getModificationTime), _ => {
+      val r = ParquetFileReader.open(util.HadoopInputFile.fromStatus(f, conf))
+      try r.getFooter finally r.close()
     })
+
+  /** a table's data files, sorted by path as schema inference sorts them,
+    * and whether inference would read the first one (not so for partition
+    * dirs or parquet summary files) */
+  private def dataFiles(spark: SparkSession, path: String) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val all = p.getFileSystem(conf).listStatus(p).toSeq.sortBy(_.getPath.toString)
+    val data = all.filterNot(f => Seq("_", ".").exists(f.getPath.getName.startsWith))
+    (conf, data, data.forall(_.isFile) && !all.exists(f =>
+      Seq("_metadata", "_common_metadata").contains(f.getPath.getName)))
+  }
+
+  /** the schema `spark.read.parquet(path)` infers (mergeSchema off),
+    * converted under this session's conf; None leaves it to inference */
+  private[graft] def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
+    val (conf, data, readsFirst) = dataFiles(spark, path)
+    data.headOption.filter(_ => readsFirst)
+      .map(f => Bridge.parquetSchema(spark, f.getPath, footer(conf, f)))
+  }
+
+  private[graft] def rowGroupCount(spark: SparkSession, path: String): Int = {
+    val (conf, data, _) = dataFiles(spark, path)
+    data.filter(_.isFile).map(footer(conf, _).getBlocks.size).sum
+  }
 
   /** `keys` override: when the first downstream operation groups by a
     * known key, spreading BY THAT KEY lets the exchange double as the

@@ -3,6 +3,9 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Port of the reference's `postgreSQL/` SQLQueryTestSuite directory
@@ -210,13 +213,18 @@ object GoldenPg {
     * the pg regression tables (onek 1000 rows, tenk1 10000, aggtest 4 —
     * bundled PostgreSQL regression data, resources/pgdata/) and Spark's
     * generated testdata/arraydata/mapdata. */
-  // parsed once per JVM; the DataFrames are rebuilt per SESSION (battery
-  // replays run in isolated Sessions.battery sessions, and a DataFrame
-  // registers temp views only in the session that built it)
-  private lazy val onekRowsCached = rowsOf("/pgdata/onek.data", onekSchema)
-  private lazy val tenkRowsCached = rowsOf("/pgdata/tenk.data", onekSchema)
-  private lazy val aggRowsCached = rowsOf("/pgdata/agg.data",
+  // converted once per JVM; each battery session registers its own views
+  // (a temp view belongs to one session) over a fresh instance
+  private lazy val onek = relationOf("/pgdata/onek.data", onekSchema)
+  private lazy val tenk1 = relationOf("/pgdata/tenk.data", onekSchema)
+  private lazy val aggtest = relationOf("/pgdata/agg.data",
     Seq("a" -> IntegerType, "b" -> FloatType))
+
+  private def relationOf(res: String,
+      schema: Seq[(String, DataType)]): LocalRelation =
+    LocalRelation.fromExternalRows(DataTypeUtils.toAttributes(
+      StructType(schema.map { case (n, t) => StructField(n, t) })),
+      rowsOf(res, schema))
 
   private def rowsOf(res: String,
       schema: Seq[(String, DataType)]): Seq[Row] =
@@ -228,8 +236,7 @@ object GoldenPg {
       }.toSeq)
     }
 
-  private def fromRows(spark: SparkSession, rows: Seq[Row],
-      schema: Seq[(String, DataType)]): DataFrame =
+  private def fromRelation(spark: SparkSession, rel: LocalRelation): DataFrame =
     // LocalRelation, not parallelize(rows): an RDD-backed view has NO stats
     // (sizeInBytes = spark.sql.defaultSizeInBytes = huge), so every join
     // against it plans sort-merge with exchanges; a LocalRelation carries
@@ -244,21 +251,14 @@ object GoldenPg {
     // leafNodeDefaultParallelism=2 was tried instead and REJECTED: it
     // flips the slicing of parser-created VALUES relations, breaking the
     // pinned variance of pg_aggregates t033 the other way.
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      StructType(schema.map { case (n, t) => StructField(n, t) }))
-      .coalesce(2)
+    Bridge.ofRows(spark, rel.newInstance()).coalesce(2)
 
   def registerFixtures(spark: SparkSession): Unit = {
     // every battery replay runs in a fresh session (the reference harness
     // gives each file its own), so register pristine fixtures each time
-    fromRows(spark, onekRowsCached, onekSchema)
-      .createOrReplaceTempView("onek")
-    fromRows(spark, tenkRowsCached, onekSchema)
-      .createOrReplaceTempView("tenk1")
-    fromRows(spark, aggRowsCached,
-      Seq("a" -> IntegerType, "b" -> FloatType))
-      .createOrReplaceTempView("aggtest")
+    fromRelation(spark, onek).createOrReplaceTempView("onek")
+    fromRelation(spark, tenk1).createOrReplaceTempView("tenk1")
+    fromRelation(spark, aggtest).createOrReplaceTempView("aggtest")
     spark.range(1, 101, 1, 1).selectExpr(
       "CAST(id AS INT) AS key", "CAST(id AS STRING) AS value")
       .createOrReplaceTempView("testdata")

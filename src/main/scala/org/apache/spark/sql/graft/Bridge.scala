@@ -1,8 +1,13 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Minimal private-API bridge: constructing a Dataset from a custom
   * LogicalPlan requires `Dataset.ofRows`, which is `private[sql]`. The
@@ -34,6 +39,12 @@ object Bridge {
     if (!exp.extraStrategies.contains(strategy))
       exp.extraStrategies = exp.extraStrategies :+ strategy
   }
+
+  /** A parquet footer's Spark schema, converted as each schema inference
+    * task converts it, under this session's parquet confs. */
+  def parquetSchema(spark: SparkSession, path: Path, meta: ParquetMetadata): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(path, meta), new ParquetToSparkSchemaConverter(
+      spark.asInstanceOf[classic.SparkSession].sessionState.conf))
 
   /** Session-local function registry (private[sql]); used to register the
     * graft functions defensively when the session wasn't built with

@@ -2,6 +2,8 @@ package graft
 
 import graft.operators.{Battery, GoldenCore}
 import graft.tools.CoercionProbe
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** One replay for every golden battery family (graft.operators.Battery):
   * a replay leaves its caller's session as it found it, the oracle probe
@@ -20,6 +22,17 @@ class BatterySpec extends GraftSpecBase {
       .foreach(n => rows(n).run(caller, sfDir).collect())
     assert(caller.conf.getAll == conf)
     assert(caller.catalog.currentDatabase == db)
+  }
+
+  test("two replays share one fixture relation but register separate views") {
+    val (a, b) = (Battery.open(spark).spark, Battery.open(spark).spark)
+    def tenk1(s: SparkSession) = s.table("tenk1").queryExecution.analyzed
+      .collectFirst { case r: LocalRelation => r }.get
+    assert(tenk1(a).data eq tenk1(b).data)
+    assert(tenk1(a).output.map(_.exprId) != tenk1(b).output.map(_.exprId))
+    a.catalog.dropTempView("tenk1")
+    assert(!a.catalog.tableExists("tenk1"))
+    assert(b.table("tenk1").count() == 10000)
   }
 
   test("the probe sees what the runtime sees") {

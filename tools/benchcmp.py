@@ -3,8 +3,10 @@
 on the same parquet at the same scale factor.
 
 Usage: python3 tools/benchcmp.py <bench_json_file> <sf_dir> [oracle_sql.json]
+
+DuckDB runs on the bench's cores: SPARK_GRAFT_CPUS when set, else nproc.
 """
-import json, sys, time
+import json, os, sys, time
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -15,7 +17,8 @@ def main(bench_file, sf_dir, oracle_file="/tmp/verify_out/oracle_sql.json"):
     queries = bench["queries"] if "queries" in bench else bench
     oracle = json.load(open(oracle_file))
     con = duckdb.connect()
-    con.execute(f"SET threads TO 32")
+    threads = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    con.execute(f"SET threads TO {threads}")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     rows = []
