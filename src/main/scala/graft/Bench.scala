@@ -1,10 +1,52 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main — one JSON line of per-query wall times at the driver's
   * scale factor. Results are fully materialized through a noop sink (count()
   * alone would let column pruning skip most of the work).
   */
 object Bench {
+
+  /** The one timed run of a row, for Bench and graft.tools.ScaleBench: the
+    * min over three iterations of `df`'s wall seconds through the noop sink,
+    * or None when no iteration succeeds (ADVICE r3: a fast-fail must not
+    * enter the artifact as if the query ran). The first iteration doubles
+    * as JIT/codegen warm-up (VERDICT r2: cold numbers read 2.3x DuckDB when
+    * warm truth was ~1.6x), and min-of-3 shields against same-JVM
+    * contention (VERDICT r4: 2-5x inflation no isolated re-run reproduced;
+    * min-of-2 let one contended iteration read as 7.7x on a 2.5x plan).
+    * `df` is rebuilt per iteration, and what the row persists is released
+    * before the row and after every iteration: no iteration reads an
+    * earlier one's cache, and a 30x-replicated shingle cache cannot outlive
+    * its row and OOM the next one's joins. Earlier rows' garbage is
+    * collected outside the timed window. */
+  def minOf3(spark: SparkSession, name: String)(df: => DataFrame): Option[Double] = {
+    release(spark)
+    System.gc()
+    (1 to 3).flatMap { _ =>
+      val t0 = System.nanoTime()
+      val ok =
+        try { df.write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
+      val dt = (System.nanoTime() - t0) / 1e9
+      release(spark)
+      if (ok) Some(dt) else None
+    }.minOption
+  }
+
+  /** Drop every persisted frame and RDD: getPersistentRDDs also reaps the
+    * localCheckpoint blocks (connected components) that clearCache can't
+    * see. */
+  private def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.session()
@@ -17,39 +59,9 @@ object Bench {
     val selected =
       if (only.isEmpty) SparkEntry.registry
       else SparkEntry.registry.filter(q => only.contains(q.name))
-    // Three measured iterations per query, report the min: the first pass
-    // doubles as JIT/codegen warm-up, so the artifact records steady-state
-    // rather than cold-start times (VERDICT r2: committed cold numbers read
-    // 2.3x DuckDB when warm truth was ~1.6x), and min-of-3 shields against
-    // same-JVM contention across 200+ back-to-back queries (VERDICT r4: the
-    // committed artifact showed 2-5x inflation on a handful of queries that
-    // no isolated re-run reproduced). clearCache between runs releases
-    // per-query persisted intermediates, not the JIT state.
-    val iters = 3
-    // NaN marks a crashed iteration (ADVICE r3: a fast-fail must not enter
-    // the artifact as if the query ran); a query with no successful
-    // iteration is reported under "failed", not in the timing map.
-    def timeOnce(q: QueryDef): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      if (ok) dt else Double.NaN
-    }
-    val timed = selected.map { q =>
-      // collect the previous query's garbage OUTSIDE the timed window so a
-      // heap full of dead batches doesn't tax this query's measurement
-      System.gc()
-      val runs = (1 to iters).map(_ => timeOnce(q)).filterNot(_.isNaN)
-      q.name -> (if (runs.isEmpty) Double.NaN else runs.min)
-    }
-    val failed = timed.collect { case (n, v) if v.isNaN => n }
-    val results = timed.filterNot(_._2.isNaN)
+    val timed = selected.map(q => q.name -> minOf3(spark, q.name)(q.run(spark, sfDir)))
+    val failed = timed.collect { case (n, None) => n }
+    val results = timed.collect { case (n, Some(v)) => n -> v }
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def qsJson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")

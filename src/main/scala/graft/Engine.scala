@@ -110,7 +110,7 @@ object Tables {
       // `div` keeps the arithmetic integral — `/` would detour through
       // double, and epoch-ns values (~1.7e18) exceed double's 2^53 exact
       // range, silently rounding sub-ms digits. Re-written events tables
-      // (e.g. ScaleSmoke) arrive as TIMESTAMP already and pass through.
+      // (e.g. Sessions.replica) arrive as TIMESTAMP already and pass through.
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else df
   }

@@ -154,7 +154,7 @@ object Sessions {
     }
 
   /** The sf dir `src` with its facts replicated `factor`× — the input of
-    * the scaled runs (graft.tools.ScaleBench, graft.tools.ScaleSmoke).
+    * the scaled runs of graft.tools.ScaleBench.
     * Built once per (src, factor) under `java.io.tmpdir` ([[installed]]),
     * reused across runs and JVMs; returns the replica's dir.
     *

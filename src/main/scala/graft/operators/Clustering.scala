@@ -280,7 +280,7 @@ object Clustering {
     * making total pair work n·C/2, linear in n), and the stage runs AFTER
     * exact dedup (verbatim duplicates all land in one cluster and pair
     * quadratically in the duplication factor — the identical ordering
-    * lesson ScaleSmoke pins for raw LSH vs the curation pipeline).
+    * lesson the ScaleBench gate pins for raw LSH vs the curation pipeline).
     *
     * Everything is deterministic — integer k-means (fitKmeansI8) +
     * closed-form cosine — so the full path (training, assignment, ranking,

@@ -409,7 +409,7 @@ object Dedup {
     "q_dedup_embedding_lsh",
     (spark, dir) => {
       // persisted for the probe/candidate double-read; released by the
-      // runner's per-query clearCache (Verify's finally, Bench's timeOnce) —
+      // runner's per-query clearCache (Verify's finally, Bench.minOf3) —
       // ad-hoc callers embedding this plan long-term should clearCache too
       val sigs = Tables(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),

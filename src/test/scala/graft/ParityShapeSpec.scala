@@ -53,11 +53,11 @@ class ParityShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("ScaleSmoke's gate exemptions are documented and minimal") {
-    assert(tools.ScaleSmoke.gateExempt ===
+  test("ScaleBench's gate exemptions are documented and minimal") {
+    assert(tools.ScaleBench.gateExempt ===
       Set("q_dedup_clusters", "q_dedup_minhash_lsh"))
     // exempted queries must still be in the heavy list, i.e. measured
-    tools.ScaleSmoke.gateExempt.foreach(q =>
-      assert(tools.ScaleSmoke.heavy.contains(q)))
+    tools.ScaleBench.gateExempt.foreach(q =>
+      assert(tools.ScaleBench.heavy.contains(q)))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.Verbatim
-import graft.tools.{PlanDump, PlanSignature, ScaleSmoke}
+import graft.tools.{PlanDump, PlanSignature, ScaleBench}
 
 /** Plan-stability gate (VERDICT r4 #7; reference: PlanStabilitySuite +
   * resources/tpcds-plan-stability/): every headline query's normalized
@@ -31,7 +31,7 @@ class PlanStabilitySpec extends GraftSpecBase {
   // side choice around that RDD flips between sessions (same tree, BHJ
   // inputs swapped — observed regen-vs-test) because a checkpointed
   // RDD carries no stable stats. Its SCALE behavior is still gated
-  // (ScaleSmoke heavy) and its logic is oracle-checked via
+  // (ScaleBench heavy) and its logic is oracle-checked via
   // q_sample_leakage_split; only the plan PIN is non-reproducible.
   // q_tpcds_verbatim_q23b is the one verbatim text whose pin is
   // non-reproducible even over the materialized fixture (its
@@ -50,7 +50,7 @@ class PlanStabilitySpec extends GraftSpecBase {
   // in isolation before and after (r11). Values stay oracle-checked
   // via its CORRECTNESS row; only the plan PIN is non-reproducible.
   private val pinned =
-    (PlanDump.headline ++ ScaleSmoke.heavy ++
+    (PlanDump.headline ++ ScaleBench.heavy ++
       Verbatim.all.flatMap(_.all.map(_.name)))
       .distinct.filterNot(Set("op_leakage_split_deduped",
         "q_tpcds_verbatim_q23b", "q_ds_above_group_avg"))
@@ -69,7 +69,7 @@ class PlanStabilitySpec extends GraftSpecBase {
       // everything planner-visible is per-session and starts clean here.
       val signer = spark.newSession()
       val sig = PlanSignature.executedSignature(
-        ScaleSmoke.runnerFor(name)(signer, sfDir))
+        ScaleBench.runner(name)(signer, sfDir))
       val f = sigDir.resolve(s"$name.sig")
       if (regen) {
         Files.createDirectories(sigDir)

@@ -10,7 +10,9 @@ Usage: python3 tools/scale_duck.py <scalebench.json>...
   sbt "runMain graft.tools.ScaleBench tpch 2" | grep '^{"metric"' > tpch_x2.json
 
 Prints one `<corpus>_duckdb_x<factor>` JSON line per input file; exits 1 if
-any query's DuckDB row count differs from ScaleBench's.
+any query's DuckDB row count differs from ScaleBench's, if a line is a
+`heavy` run (its rows have no DuckDB statement), or if a line lists rows
+under `failed`.
 """
 import json
 import os
@@ -96,8 +98,14 @@ def main(paths):
     by_corpus, lines, mismatched = {}, [], []
     for path in paths:
         bench = json.load(open(path))
+        if bench["metric"].startswith("heavy_"):
+            sys.exit(f"{path}: {bench['metric']} is a heavy run; only "
+                     f"tpch/tpcds/ssb runs have DuckDB twins")
         corpus = bench["metric"].split("_verbatim_")[0]
         factor = bench["factor"]
+        if bench.get("failed"):
+            sys.exit(f"{path}: {corpus} x{factor} rows failed in ScaleBench: "
+                     f"{', '.join(bench['failed'])}")
         times, rows = run(bench)
         mismatched += [f"{corpus} x{factor} {q}: graft {bench['rows'][q]} "
                        f"duck {n}" for q, n in rows.items()
