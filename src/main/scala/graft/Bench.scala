@@ -39,8 +39,8 @@ object Bench {
   }
 
   /** Drop every persisted frame and RDD: getPersistentRDDs also reaps the
-    * localCheckpoint blocks (connected components) that clearCache can't
-    * see. */
+    * localCheckpoint blocks that clearCache can't see (graph rounds, and
+    * connected components over a pair list too large for the driver). */
   private def release(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values

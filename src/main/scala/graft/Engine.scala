@@ -123,8 +123,9 @@ object Tables {
     * matter how Spark byte-splits the files. [[spread]] redistributes such
     * a table once, by a natural high-cardinality key (never rand(): retry
     * safety, guide §2.5), to the session's shuffle parallelism BEFORE the
-    * heavy compute. The condition derives from the input itself (footer
-    * row-group count vs `defaultParallelism`), so at production layouts —
+    * heavy compute. The condition derives from the input itself (the
+    * smaller of the footer row-group count and the scan's planned
+    * partitions vs `defaultParallelism`), so at production layouts —
     * hundreds of row groups per 100 TB table — it is the identity and adds
     * NO exchange; only a degenerate layout pays the (tiny, proportional)
     * one-time shuffle. Callers are the per-row-heavy operators only:
@@ -190,8 +191,12 @@ object Tables {
       keys: String*): DataFrame = {
     val df = apply(spark, dir, name)
     val ks = if (keys.nonEmpty) keys else spreadKeys.getOrElse(name, Nil)
-    if (ks.isEmpty || rowGroupCount(spark, s"$dir/$name.parquet") >=
-        spark.sparkContext.defaultParallelism) df
+    val cores = spark.sparkContext.defaultParallelism
+    // Spark packs a small file's row groups into one split (the split
+    // size floor is `openCostInBytes`), so the planned partition count
+    // bounds the scan's tasks too; `df.rdd` plans it without a job
+    if (ks.isEmpty || (rowGroupCount(spark, s"$dir/$name.parquet") >= cores &&
+        df.rdd.getNumPartitions >= cores)) df
     else df.repartition(ks.map(df.col): _*)
   }
 

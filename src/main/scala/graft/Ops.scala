@@ -39,7 +39,10 @@ object ops {
   /** MinHash + LSH near-dup candidate pairs over any document frame — see
     * [[graft.operators.Dedup.minHashNearDup]]: shingle → k minhashes →
     * banded bucket join → agreement-score filter; one shuffle on the band
-    * hash, never all-pairs. Returns `(doc_a, doc_b, est_jaccard)`. */
+    * hash, never all-pairs. Returns `(doc_a, doc_b, est_jaccard)`.
+    * Caching contract: the signature table is persist()ed (read by both
+    * sides of the band join); release it with `spark.catalog.clearCache()`
+    * after the consuming action, same as [[dsirWeights]]. */
   def minHashNearDup(
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.25, hashes: Int = 32, bands: Int = 8): DataFrame =
@@ -78,8 +81,11 @@ object ops {
   /** Connected components over an undirected `(doc_a, doc_b)` pair list —
     * see [[graft.operators.Dedup.componentLabels]]: min-label propagation
     * with pointer jumping, O(log diameter) rounds, hard failure instead of
-    * silently-wrong clusters at the round cap. Compose after
-    * [[minHashNearDup]] to turn candidate pairs into dedup groups. */
+    * silently-wrong clusters at the round cap. Eager: the pair plan runs
+    * once, here; a list under `spark.sql.autoBroadcastJoinThreshold` is
+    * labelled in driver memory, a larger one by one Spark job per round.
+    * Compose after [[minHashNearDup]] to turn candidate pairs into dedup
+    * groups. */
   def nearDupClusters(pairs: DataFrame, maxRounds: Int = 25): DataFrame =
     graft.operators.Dedup.componentLabels(pairs, maxRounds)
 

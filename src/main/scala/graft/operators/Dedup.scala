@@ -2,7 +2,15 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
+import scala.collection.immutable.TreeSet
 
 /** Deduplication surface for large-scale training-data pipelines.
   *
@@ -501,25 +509,103 @@ object Dedup {
   }
 
   /** Connected components over an undirected pair list `(doc_a, doc_b)` →
-    * `(doc, label)` where label = smallest doc id reachable from doc.
+    * `(doc, label)` where label = smallest doc id reachable from doc, in
+    * Spark's ordering of the id type (a null id is its own component,
+    * labelled null).
     *
     * Min-label propagation *plus pointer jumping*: each round first takes
-    * the min over neighbors' labels (one shuffle on the edge key), then
-    * follows one label indirection (`label := label(label)`, a self-join),
-    * which halves the remaining chain depth — O(log diameter) rounds instead
-    * of O(diameter), so a 25-round cap covers any graph a dedup pass can
-    * produce (diameter ≤ 2^25). If the cap is ever hit the method THROWS
-    * rather than returning silently-wrong clusters (VERDICT r2 "What's
-    * wrong" #2a). Each round's frame is `localCheckpoint`ed: lineage is
-    * truncated so analysis cost stays constant per round instead of growing
-    * with the round number (#2b); at 100 TB swap for a reliable
-    * `checkpoint()` to an HDFS dir so executor loss can't drop a round.
+    * the min over neighbors' labels, then follows one label indirection
+    * (`label := label(label)`), which halves the remaining chain depth —
+    * O(log diameter) rounds instead of O(diameter), so a 25-round cap
+    * covers any graph a dedup pass can produce (diameter ≤ 2^25). If the
+    * cap is ever hit the method THROWS rather than returning silently-wrong
+    * clusters (VERDICT r2 "What's wrong" #2a).
+    *
+    * The pair list is `localCheckpoint`ed first, so the caller's pair plan
+    * runs once, and its size picks the executor. A list of at most
+    * `spark.sql.autoBroadcastJoinThreshold` bytes (rows × Spark's row size
+    * estimate; the bound Spark itself uses for shipping a relation through
+    * the driver, ≤ 0 = never) runs the same rounds in driver memory, with
+    * no job per round, and comes back as an RDD-backed frame. A larger one
+    * runs [[distributedLabels]].
     */
   def componentLabels(
       pairs: org.apache.spark.sql.DataFrame,
       maxRounds: Int = 25): org.apache.spark.sql.DataFrame = {
-    val nodes = pairs.select(col("doc_a").as("doc"))
-      .union(pairs.select(col("doc_b").as("doc"))).distinct()
+    val list = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint()
+    val nodes = list.select(col("doc_a").as("doc"))
+      .union(list.select(col("doc_b").as("doc"))).distinct()
+    val bound = list.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    def bytes = EstimationUtils.getSizePerRow(list.queryExecution.analyzed.output) *
+      list.count()
+    if (bound > 0 && bytes <= bound) localLabels(list, nodes, maxRounds)
+    else distributedLabels(list, nodes, maxRounds)
+  }
+
+  private def notConverged(maxRounds: Int) = new IllegalStateException(
+    s"componentLabels did not converge in $maxRounds rounds — " +
+      "graph diameter exceeds 2^" + maxRounds)
+
+  /** [[componentLabels]]' rounds on the driver over a collected pair list.
+    * Nodes are indexed in Spark's order of the id type, so a label is a
+    * node index and the min over labels is an int min. The result has the
+    * distributed result's schema (`doc` is `nodes`' column, `label` its
+    * twin) and carries what `nodes`' plan guarantees of `doc` (e.g. not
+    * null), as the last round's checkpoint does, so the optimizer infers no
+    * extra filter above it. The collected list's checkpoint blocks are
+    * released. */
+  private def localLabels(list: org.apache.spark.sql.DataFrame,
+      nodes: org.apache.spark.sql.DataFrame,
+      maxRounds: Int): org.apache.spark.sql.DataFrame = {
+    val doc = nodes.schema("doc")
+    val t = doc.dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(t)
+    val pairs = list.select(col("doc_a").cast(t), col("doc_b").cast(t)).collect()
+      .map(r => (toCatalyst(r.get(0)), toCatalyst(r.get(1))))
+    list.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
+    val ord = PhysicalDataType.ordering(t)
+    val ids = (TreeSet.empty(ord) ++
+      pairs.flatMap { case (a, b) => Seq(a, b) }.filter(_ != null)).toIndexedSeq
+    val (whole, withNull) = pairs.partition { case (a, b) => a != null && b != null }
+    val edges = whole.map { case (a, b) =>
+      (ids.search(a)(ord).insertionPoint, ids.search(b)(ord).insertionPoint) }
+    var label = Array.tabulate(ids.length)(identity)
+    var converged = false
+    var rounds = 0
+    while (!converged && rounds < maxRounds) {
+      val propagated = label.clone()
+      for ((a, b) <- edges) {
+        propagated(a) = math.min(propagated(a), label(b))
+        propagated(b) = math.min(propagated(b), label(a))
+      }
+      val next = propagated.map(l => math.min(l, propagated(l)))
+      converged = !next.indices.exists(v => next(v) < label(v))
+      label = next
+      rounds += 1
+    }
+    if (!converged) throw notConverged(maxRounds)
+    val out = ids.indices.map(v => InternalRow(ids(v), ids(label(v)))) ++
+      (if (withNull.nonEmpty) Seq(InternalRow(null, null)) else Nil)
+    val nodePlan = nodes.queryExecution.optimizedPlan
+    val nodeDoc = nodePlan.output.head
+    Bridge.rowsFrame(list.sparkSession, out,
+        StructType(Seq(doc, doc.copy(name = "label")))) { output =>
+      nodePlan.constraints.toSeq.map(_.transform {
+        case a: Attribute if a.semanticEquals(nodeDoc) => output.head
+      })
+    }
+  }
+
+  /** [[componentLabels]]' rounds as Spark jobs, for pair lists too large
+    * for the driver. Each round is one shuffle on the edge key plus a label
+    * self-join, and each round's frame is `localCheckpoint`ed: lineage is
+    * truncated so analysis cost stays constant per round instead of growing
+    * with the round number (#2b); at 100 TB swap for a reliable
+    * `checkpoint()` to an HDFS dir so executor loss can't drop a round. */
+  private def distributedLabels(list: org.apache.spark.sql.DataFrame,
+      nodes: org.apache.spark.sql.DataFrame,
+      maxRounds: Int): org.apache.spark.sql.DataFrame = {
     // undirected edge list, both directions. Partitioned BY THE ROUND
     // JOIN KEY before caching (guide §2.4 "two operations keyed the same
     // way share one exchange"): the cached relation reports
@@ -528,8 +614,8 @@ object Dedup {
     // at scale the edge list is the big side of every round.
     // Measured on a 2M-node graph: 15.25 vs 18.25 s, 33% fewer shuffle
     // bytes (OPTIMIZATION_r14.md).
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    val edges = list.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(list.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .repartition(col("src"))
       .persist()
     var labels = nodes.select(col("doc"), col("doc").as("label"))
@@ -564,9 +650,7 @@ object Dedup {
       rounds += 1
     }
     edges.unpersist(blocking = false)
-    if (!converged) throw new IllegalStateException(
-      s"componentLabels did not converge in $maxRounds rounds — " +
-        "graph diameter exceeds 2^" + maxRounds)
+    if (!converged) throw notConverged(maxRounds)
     labels
   }
 

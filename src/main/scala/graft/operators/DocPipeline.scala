@@ -72,8 +72,9 @@ object DocPipeline {
       .select(col("r.*"))
       .persist()
     // near-dup: candidate pairs → clusters → drop non-representatives.
-    // componentLabels materializes eagerly (localCheckpoint rounds), so the
-    // pair subgraph resolves here; only the tiny drop-list joins back.
+    // componentLabels is eager: the pair plan runs once, here, and a pair
+    // list under the broadcast threshold is labelled in driver memory; only
+    // the tiny drop-list joins back.
     val keyed = exactKept.select(col("doc_id"), col("text"))
     val pairs = nearDup match {
       case "ngram" =>

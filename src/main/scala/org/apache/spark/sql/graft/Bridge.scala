@@ -4,8 +4,12 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, ExpressionSet}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
@@ -45,6 +49,18 @@ object Bridge {
   def parquetSchema(spark: SparkSession, path: Path, meta: ParquetMetadata): StructType =
     ParquetFileFormat.readSchemaFromFooter(new Footer(path, meta), new ParquetToSparkSchemaConverter(
       spark.asInstanceOf[classic.SparkSession].sessionState.conf))
+
+  /** A frame over `rows` (Spark's internal format) as `schema`: the RDD
+    * scan `createDataFrame` gives (no size estimate), whose rows also
+    * satisfy `constraints` of the scan's output, as a `localCheckpoint`ed
+    * frame carries its plan's, so the optimizer infers no filter for them. */
+  def rowsFrame(spark: SparkSession, rows: Seq[InternalRow], schema: StructType)(
+      constraints: Seq[Attribute] => Seq[Expression]): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val output = DataTypeUtils.toAttributes(schema)
+    classic.Dataset.ofRows(s, LogicalRDD(output, s.sparkContext.parallelize(rows))(
+      s, None, Some(ExpressionSet(constraints(output)))))
+  }
 
   /** Session-local function registry (private[sql]); used to register the
     * graft functions defensively when the session wasn't built with

@@ -96,6 +96,105 @@ class DedupSpec extends GraftSpecBase {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  // componentLabels runs its rounds on the driver when the pair list fits
+  // under spark.sql.autoBroadcastJoinThreshold (the tests above) and as
+  // Spark jobs otherwise; a session with the threshold off forces the jobs
+  private def distributed = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
+
+  /** seeded chains, stars, cycles and disjoint pairs over shuffled ids,
+    * plus one pair with a null id */
+  private def graph(seed: Long): Seq[(Option[Long], Option[Long])] = {
+    val rnd = new scala.util.Random(seed)
+    val ids = rnd.shuffle((1L to 400L).toVector).iterator
+    def next(n: Int) = Vector.fill(n)(ids.next())
+    val chains = (1 to 3).flatMap { _ =>
+      val c = next(2 + rnd.nextInt(30)); c.zip(c.tail) }
+    val stars = (1 to 3).flatMap { _ =>
+      val c = next(2 + rnd.nextInt(8)); c.tail.map(c.head -> _) }
+    val cycles = (1 to 2).flatMap { _ =>
+      val c = next(3 + rnd.nextInt(6)); c.zip(c.tail :+ c.head) }
+    val disjoint = (1 to 5).map(_ => next(2)).map(c => (c(0), c(1)))
+    val pairs = rnd.shuffle(chains ++ stars ++ cycles ++ disjoint)
+      .map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) }
+    pairs.map { case (a, b) => (Option(a), Option(b)) } :+
+      (Option(ids.next()), Option.empty[Long])
+  }
+
+  private def labelsIn(s: org.apache.spark.sql.SparkSession,
+      rows: Seq[org.apache.spark.sql.Row],
+      t: org.apache.spark.sql.types.DataType) = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("doc_a", t), StructField("doc_b", t)))
+    operators.Dedup.componentLabels(
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+  }
+
+  private def sameOnBothPaths(rows: Seq[org.apache.spark.sql.Row],
+      t: org.apache.spark.sql.types.DataType) = {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val local = labelsIn(spark, rows, t)
+    val jobs = labelsIn(distributed, rows, t)
+    // the driver path's frame is the RDD itself; the distributed one
+    // projects the last round's checkpoint
+    assert(local.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+    assert(!jobs.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+    assert(local.schema == jobs.schema)
+    val got = local.collect().toSet
+    assert(got == jobs.collect().toSet)
+    assert(got.size == local.count())
+    got.map(r => r.get(0) -> r.get(1)).toMap
+  }
+
+  test("componentLabels: driver and distributed rounds agree (Long ids)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.LongType
+    for (seed <- 1L to 3L) {
+      val g = graph(seed)
+      val labels = sameOnBothPaths(g.map { case (a, b) =>
+        Row(a.map(Long.box).orNull, b.map(Long.box).orNull) }, LongType)
+      assert(labels(null) == null)
+      g.collect { case (Some(a), Some(b)) =>
+        assert(labels(a) == labels(b), s"seed $seed: $a and $b split") }
+    }
+  }
+
+  test("componentLabels: driver and distributed rounds agree (String ids, " +
+      "Spark's UTF-8 order)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StringType
+    // U+FF61 sorts before U+1F600 in UTF-8 bytes (EF.. < F0..) but after
+    // it in UTF-16 units (FF61 > D83D): the label is the UTF-8 minimum
+    val (halfwidth, emoji) = ("\uFF61", "\uD83D\uDE00")
+    assert(emoji.compareTo(halfwidth) < 0)
+    val g = graph(7).map { case (a, b) =>
+      Row(a.map(i => s"n$i").orNull, b.map(i => s"n$i").orNull) } :+
+      Row(emoji, halfwidth)
+    val labels = sameOnBothPaths(g, StringType)
+    assert(labels(emoji) == halfwidth && labels(halfwidth) == halfwidth)
+  }
+
+  test("componentLabels throws at the cap on the distributed path too") {
+    val s = distributed; import s.implicits._
+    val pairs = (0L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalStateException] {
+      operators.Dedup.componentLabels(pairs, maxRounds = 2).collect()
+    }
+    assert(e.getMessage.contains("did not converge"))
+  }
+
+  test("componentLabels on the driver starts the same few jobs at any " +
+      "diameter") {
+    val s = spark; import s.implicits._
+    def jobs(diameter: Long) = jobsDuring(operators.Dedup.componentLabels(
+      (0L until diameter).map(i => (i, i + 1)).toDF("doc_a", "doc_b")))
+    val (short, long) = (jobs(4), jobs(200))
+    assert(short == long && long <= 4, s"$short vs $long jobs")
+  }
+
   // --- incremental admission -------------------------------------------
 
   private val baseText = ("the quick brown fox jumps over a lazy dog while " +

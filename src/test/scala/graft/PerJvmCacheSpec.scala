@@ -2,12 +2,9 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graft.ListenerBus
 
 /** Costs paid once per JVM: a table's footer is read once per data file
   * (graft.Tables) and follows a rewritten file, the schema it yields is the
@@ -18,26 +15,6 @@ class PerJvmCacheSpec extends GraftSpecBase {
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
-
-  /** jobs started from this thread while `body` runs */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-jobs-${System.nanoTime}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted", interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
-      ListenerBus.drain(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("a second session registers seen tables without a Spark job") {
     Tables.registerAll(spark.newSession(), sfDir)
