@@ -40,8 +40,9 @@ object Bench {
 
   /** Drop every persisted frame and RDD: getPersistentRDDs also reaps the
     * localCheckpoint blocks that clearCache can't see (graph rounds, and
-    * connected components over a pair list too large for the driver). */
-  private def release(spark: SparkSession): Unit = {
+    * connected components over a pair list too large for the driver).
+    * Between rows of a Bench, ScaleBench or Verify run. */
+  private[graft] def release(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))

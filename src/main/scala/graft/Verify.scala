@@ -18,9 +18,10 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
-        // queries may persist() intermediates (signature tables etc.) —
-        // release them between queries so the multi-hundred-query run stays flat
-        spark.catalog.clearCache()
+        // queries may persist() intermediates (signature tables etc.) and
+        // localCheckpoint graph rounds — release both between queries so
+        // the multi-hundred-query run stays flat
+        Bench.release(spark)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -109,38 +109,6 @@ object Clustering {
     assignExact(v, cents).select(col("id"), col("cluster"), col("dist2"))
   }
 
-  /** Top-`nProbe` cell ids per row against trained centroids (exploded:
-    * one output row per (id, probed cell), rank 1 = nearest). The IVF
-    * probe-side primitive; still a narrow map plus a bounded per-row
-    * sort of k scores. */
-  def probeCellsI8(
-      quantized: DataFrame,
-      idCol: String,
-      vecCol: String,
-      cents: Array[Array[Long]],
-      nProbe: Int): DataFrame = {
-    require(nProbe > 0 && nProbe <= cents.length,
-      s"nProbe must be in [1, ${cents.length}]: $nProbe")
-    val v = quantized.select(
-      col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    val scores: Seq[Column] = cents.toIndexedSeq.zipWithIndex.map {
-      case (cj, j) =>
-        val cc = cj.map(x => x * x).sum
-        val centLit = s"CAST(array(${cj.mkString(",")}) AS ARRAY<TINYINT>)"
-        // pack (score, cell) into one orderable struct literal pair
-        struct(
-          (lit(cc) - lit(2L) * expr(s"vec_dot_i8(v, $centLit)")).as("s"),
-          lit(j.toLong).as("cell"))
-    }
-    // array_sort on (score, cell) structs: lexicographic = score then cell,
-    // the same tie rule as assignExact
-    v.withColumn("ranked", slice(array_sort(array(scores: _*)), 1, nProbe))
-      .select(col("id"), col("v"),
-        posexplode(col("ranked")).as(Seq("rank0", "sc")))
-      .select(col("id"), col("v"), col("sc.cell").as("cell"),
-        (col("rank0") + 1).cast("long").as("probe_rank"))
-  }
-
   /** Top-`nProbe` cells per row by COSINE to the trained centroids (the
     * retrieval metric — training is int8-L2, but assignment/probing for
     * ANN uses the same cosine the re-rank stage scores with, so cell

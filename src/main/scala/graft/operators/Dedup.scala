@@ -123,54 +123,29 @@ object Dedup {
   private[graft] val numBands = 8
   private[graft] val rowsPerBand = numHashes / numBands
 
-  /** doc_id + 32-long minhash signature per document. Persisted: the LSH
-    * band self-join consumes it from both sides, and signature hashing is
-    * the expensive stage (at 100 TB this is the materialized signature
-    * table every dedup round reads). */
-  private[operators] def minhashSignatures(
-      spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    Tables(spark, dir, "documents")
-      .select(col("doc_id"), shingles(toks(col("text"))).as("grams"))
-      .select(col("doc_id"), expr("minhash_sig(grams)").as("sig"))
-      .persist()
-  }
+  /** (doc_id, `hashes`-long minhash signature) per document (native
+    * kernel over the word-3-gram shingles). */
+  private def minhashSigs(
+      docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
+      hashes: Int): org.apache.spark.sql.DataFrame =
+    docs
+      .select(col(idCol).as("doc_id"),
+        shingles(toks(col(textCol))).as("grams"))
+      .select(col("doc_id"), expr(s"minhash_sig(grams, $hashes)").as("sig"))
 
   /** Library API: MinHash + LSH near-dup candidate pairs over any document
-    * frame — shingle → `hashes` minhashes → `bands` bands → bucket-join on
-    * band hash → signature-agreement estimate ≥ `threshold`. One shuffle on
-    * the band hash, pairs form only within buckets (O(n·bands), never
-    * all-pairs). The signature is carried through the band explode so pairs
-    * need no re-join against the signature table, the agreement score is
-    * computed BEFORE pair dedup (scoring is cheap; deduping first would
-    * shuffle both 32-long signatures per candidate row), and survivors —
-    * ids + score only — dedup in a near-empty exchange. */
+    * frame — shingle → `hashes` minhashes → `bands` bands keyed by
+    * xxhash64 → [[Lsh.bandPairs]] (bucket-join, signature-agreement
+    * estimate ≥ `threshold`). One shuffle on the band key, pairs form only
+    * within buckets (O(n·bands), never all-pairs). The signature table is
+    * persisted: both sides of the band self-join read it. */
   def minHashNearDup(
       docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.25, hashes: Int = 32, bands: Int = 8)
       : org.apache.spark.sql.DataFrame = {
     require(hashes % bands == 0, s"bands ($bands) must divide hashes ($hashes)")
-    val rows = hashes / bands
-    val sigs = docs
-      .select(col(idCol).as("doc_id"),
-        shingles(toks(col(textCol))).as("grams"))
-      .select(col("doc_id"), expr(s"minhash_sig(grams, $hashes)").as("sig"))
-      .persist()
-    val banded = sigs.select(col("doc_id"), col("sig"), posexplode(
-      array((0 until bands).map(bnd => xxhash64(
-        (lit(bnd) +: (0 until rows).map(j =>
-          element_at(col("sig"), bnd * rows + j + 1))): _*)): _*))
-      .as(Seq("band_id", "band_hash")))
-    banded.as("x")
-      .join(banded.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_hash") === col("y.band_hash") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        (aggregate(zip_with(col("x.sig"), col("y.sig"),
-          (p, q) => when(p === q, 1).otherwise(0)), lit(0), _ + _)
-          .cast("double") / hashes.toDouble).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-      .dropDuplicates("doc_a", "doc_b")
+    val sigs = minhashSigs(docs, idCol, textCol, hashes).persist()
+    Lsh.bandPairs(sigs, hashes, bands, Lsh.hashKey, threshold)
   }
 
   /** Fixed affine-permutation coefficients for the DETERMINISTIC MinHash
@@ -188,14 +163,6 @@ object Dedup {
       (a, b)
     }
 
-  /** Library API: MinHash + LSH with DETERMINISTIC md5-derived arithmetic
-    * signatures — identical plan shape to [[minHashNearDup]] (signature →
-    * band → bucket-join, one shuffle on the band key, O(n·bands) candidate
-    * pairs), but every hash is plain integer arithmetic over
-    * `conv(substr(md5(gram),1,7),16,10)`, so ANY ANSI engine reproduces the
-    * signatures bit-for-bit and the whole near-dup output is
-    * oracle-checkable. The xxhash kernel path above stays the single-pass
-    * hot path; this is the auditable twin. */
   /** (doc_id, 32-long arithmetic minhash signature) per document — the
     * shared signature stage of [[minHashNearDupArith]], also replayed
     * row-at-a-time by the streaming ingest path
@@ -216,27 +183,19 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
   }
 
+  /** Library API: MinHash + LSH with DETERMINISTIC md5-derived arithmetic
+    * signatures — identical plan shape to [[minHashNearDup]] (signature →
+    * band → bucket-join, one shuffle on the band key, O(n·bands) candidate
+    * pairs), but every hash is plain integer arithmetic over
+    * `conv(substr(md5(gram),1,7),16,10)`, so ANY ANSI engine reproduces the
+    * signatures bit-for-bit and the whole near-dup output is
+    * oracle-checkable. The xxhash kernel path above stays the single-pass
+    * hot path; this is the auditable twin. */
   def minHashNearDupArith(
       docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.25): org.apache.spark.sql.DataFrame = {
     val sigs = minhashArithSigs(docs, idCol, textCol).persist()
-    val banded = sigs.select(col("doc_id"), col("sig"), posexplode(
-      array((0 until numBands).map(bnd => struct(
-        (0 until rowsPerBand).map(j =>
-          element_at(col("sig"), bnd * rowsPerBand + j + 1).as(s"k$j")): _*))
-        : _*))
-      .as(Seq("band_id", "band_key")))
-    banded.as("x")
-      .join(banded.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        (aggregate(zip_with(col("x.sig"), col("y.sig"),
-          (p, q) => when(p === q, 1).otherwise(0)), lit(0), _ + _)
-          .cast("double") / numHashes.toDouble).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-      .dropDuplicates("doc_a", "doc_b")
+    Lsh.bandPairs(sigs, numHashes, numBands, Lsh.structKey, threshold)
   }
 
   /** DuckDB replay of [[minHashNearDupArith]] — same shingles, same md5
@@ -244,22 +203,14 @@ object Dedup {
   private def minhashArithOracle: String = {
     val minExprs = arithCoeffs.zipWithIndex.map { case ((a, b), i) =>
       s"min(($a * h + $b) % $arithP) AS m$i" }.mkString(", ")
-    val sigCols = (0 until numHashes).map(i => s"m$i").mkString(", ")
-    val bandSelects = (0 until numBands).map { bnd =>
-      val keys = (0 until rowsPerBand).map(j =>
-        s"m${bnd * rowsPerBand + j} AS k$j").mkString(", ")
-      s"SELECT doc_id, $bnd AS band_id, $keys, $sigCols FROM sig"
-    }.mkString(" UNION ALL ")
-    val matches = (0 until numHashes).map(i =>
-      s"CASE WHEN x.m$i = y.m$i THEN 1 ELSE 0 END").mkString(" + ")
-    val keyEq = (0 until rowsPerBand).map(j => s"x.k$j = y.k$j")
-      .mkString(" AND ")
+    val matches = Lsh.duckMatches(numHashes)
+    val keyEq = Lsh.duckSameKey(numHashes, numBands)
     s"""
       WITH g AS (SELECT doc_id, unnest($duckShingles) AS g FROM documents),
       h AS (SELECT doc_id,
                    ('0x' || substr(md5(g), 1, 7))::BIGINT AS h FROM g),
       sig AS (SELECT doc_id, $minExprs FROM h GROUP BY doc_id),
-      banded AS ($bandSelects),
+      banded AS (${Lsh.duckBands(numHashes, numBands, "sig")}),
       pairs AS (
         SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
                CAST($matches AS DOUBLE) / $numHashes.0 AS est_jaccard
@@ -279,52 +230,31 @@ object Dedup {
       Tables(spark, dir, "documents"), "doc_id", "text"),
     Some(minhashArithOracle))
 
-  /** SimHash: 64-bit token-hash majority fingerprint; candidate pairs via
-    * 4×16-bit chunk buckets (pigeonhole: hamming≤3 ⇒ ≥1 chunk equal);
-    * verified with bit_count(xor) ≤ 3. Spark-only (xxhash64). */
-  /** Library API: SimHash near-dup pairs over any document frame. 64-bit
-    * token-hash majority fingerprint (native codegen kernel — one
-    * JIT-compiled vote loop, not interpreted lambdas); candidates via
-    * 4×16-bit chunk buckets (pigeonhole: hamming ≤ `maxHamming` ≤ 3 ⇒ ≥1
-    * chunk equal), verified with bit_count(xor). Hamming filter runs
-    * BEFORE pair dedup so the distinct shuffles survivors only. */
-  def simHashNearDup(
-      docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3): org.apache.spark.sql.DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"pigeonhole guarantee holds only for maxHamming <= 3, got $maxHamming")
-    // persist — the chunk self-join reads it twice
-    val sim = docs
+  /** (doc_id, simhash) per document: the 64-bit token-hash majority
+    * fingerprint (native codegen kernel — one JIT-compiled vote loop, not
+    * interpreted lambdas; xxhash64 token hashes, so Spark-only). */
+  private[graft] def simhashSigs(
+      docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String)
+      : org.apache.spark.sql.DataFrame =
+    docs
       .select(col(idCol).as("doc_id"), toks(col(textCol)).as("toks"))
       .select(col("doc_id"), expr("simhash64(toks)").as("simhash"))
-      .persist()
-    val chunks = sim.select(col("doc_id"), col("simhash"), posexplode(
-      array((0 until 4).map(k =>
-        expr(s"shiftright(simhash, ${16 * k}) & 65535")): _*))
-      .as(Seq("chunk_id", "chunk_val")))
-    chunks.as("x")
-      .join(chunks.as("y"),
-        col("x.chunk_id") === col("y.chunk_id") &&
-          col("x.chunk_val") === col("y.chunk_val") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        expr("bit_count(x.simhash ^ y.simhash)").cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
 
-  /** Library API: SimHash with DETERMINISTIC md5-derived token hashes — a
-    * 60-bit fingerprint (bits 0..59 of the per-token majority vote, kept
-    * below the sign bit so every engine's signed-64 shifts agree), candidate
-    * pairs via 4×15-bit chunk buckets (pigeonhole: hamming ≤ 3 ⇒ ≥ 1 chunk
-    * equal), verified with bit_count(xor) — same plan shape as the xxhash
-    * kernel path ([[simHashNearDup]]) but fully replayable in ANSI SQL. */
-  private[operators] val simBits = 60
-  def simHashNearDupArith(
+  /** Library API: SimHash near-dup pairs over any document frame, hamming
+    * ≤ `maxHamming` ≤ 3 — [[simhashSigs]] through [[Lsh.chunkPairs]] with
+    * 4×16-bit chunks, which cover all 64 bits. */
+  def simHashNearDup(
       docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3): org.apache.spark.sql.DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"pigeonhole guarantee holds only for maxHamming <= 3, got $maxHamming")
+      maxHamming: Int = 3): org.apache.spark.sql.DataFrame =
+    Lsh.chunkPairs(simhashSigs(docs, idCol, textCol), 16, maxHamming)
+
+  /** SimHash with DETERMINISTIC md5-derived token hashes — a 60-bit
+    * fingerprint (bits 0..59 of the per-token majority vote, kept below the
+    * sign bit so every engine's signed-64 shifts agree) per document. */
+  private[operators] val simBits = 60
+  private[graft] def simhashArithSigs(
+      docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String)
+      : org.apache.spark.sql.DataFrame = {
     val tokens = docs
       .select(col(idCol).as("doc_id"), explode(toks(col(textCol))).as("t"))
       .select(col("doc_id"),
@@ -336,27 +266,22 @@ object Dedup {
     val voteCols = (0 until simBits).map(b =>
       sum(expr(s"shiftright(h, $b) & 1")).as(s"v$b")) :+
       count(lit(1)).as("vn")
-    val sim = tokens.groupBy(col("doc_id"))
+    tokens.groupBy(col("doc_id"))
       .agg(voteCols.head, voteCols.tail: _*)
       .select(col("doc_id"),
         (0 until simBits).map(b =>
           when(col(s"v$b") * 2 > col("vn"), lit(1L << b)).otherwise(lit(0L)))
           .reduce(_ + _).as("simhash"))
-      .persist()
-    val chunks = sim.select(col("doc_id"), col("simhash"), posexplode(
-      array((0 until 4).map(k =>
-        expr(s"shiftright(simhash, ${15 * k}) & 32767")): _*))
-      .as(Seq("chunk_id", "chunk_val")))
-    chunks.as("x")
-      .join(chunks.as("y"),
-        col("x.chunk_id") === col("y.chunk_id") &&
-          col("x.chunk_val") === col("y.chunk_val") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        expr("bit_count(x.simhash ^ y.simhash)").cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
   }
+
+  /** Library API: SimHash over [[simhashArithSigs]] through
+    * [[Lsh.chunkPairs]] with 4×15-bit chunks, which cover the 60 bits —
+    * the plan shape of the xxhash kernel path ([[simHashNearDup]]), but
+    * fully replayable in ANSI SQL. */
+  def simHashNearDupArith(
+      docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
+      maxHamming: Int = 3): org.apache.spark.sql.DataFrame =
+    Lsh.chunkPairs(simhashArithSigs(docs, idCol, textCol), 15, maxHamming)
 
   /** DuckDB replay of [[simHashNearDupArith]]: unrolled 60 per-bit majority
     * votes, fingerprint reassembly from literal powers of two, 4-chunk
@@ -367,9 +292,6 @@ object Dedup {
       .mkString(", ")
     val build = (0 until simBits).map(b =>
       s"(CASE WHEN v$b > 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")
-    val chunkSelects = (0 until 4).map(k =>
-      s"SELECT doc_id, simhash, $k AS chunk_id, (simhash >> ${15 * k}) & 32767 AS chunk_val FROM s")
-      .mkString(" UNION ALL ")
     s"""
       WITH t AS (SELECT doc_id, unnest(str_split(text, ' ')) AS t
                  FROM documents),
@@ -377,7 +299,7 @@ object Dedup {
                    ('0x' || substr(md5(t), 1, 15))::BIGINT AS h FROM t),
       v AS (SELECT doc_id, $votes FROM h GROUP BY doc_id),
       s AS (SELECT doc_id, $build AS simhash FROM v),
-      c AS ($chunkSelects),
+      c AS (${Lsh.duckChunks(15, "s")}),
       pairs AS (
         SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
                CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT)
@@ -398,21 +320,12 @@ object Dedup {
 
   /** Embedding-cosine near-dup pairs — the LSH-bucketed SCALE path (this is
     * the variant to run at 100 TB; [[embeddingNearDup]] below is the bounded
-    * brute-force baseline). A 12-bit sign projection (native codegen
-    * kernel, integer-derived hyperplanes → the DuckDB oracle reproduces
-    * every bucket bit-for-bit) is split into TWO independent 6-bit hash
-    * tables (the classic OR-construction: a pair is a candidate if it
-    * collides in EITHER table, squaring the miss probability); each vector
-    * additionally probes all hamming≤2 neighbor buckets per table (22
-    * probes × 2 tables). Candidate pairs form only within probed buckets —
-    * one shuffle on the (table, bucket) key, O(n·probes) pairs tested
-    * instead of O(n²). Precision is exact (every emitted pair passed the
-    * true cosine test); recall vs the brute-force truth is pinned in
-    * DedupSpec. */
-  private[operators] val probeMasks: Seq[Long] =
-    0L +: ((0 until 6).map(i => 1L << i) ++
-      (for { i <- 0 until 6; j <- i + 1 until 6 } yield (1L << i) | (1L << j)))
-
+    * brute-force baseline), over the sign-projection index of [[Lsh]]:
+    * every vector probes its 44 buckets against every vector's 2 home
+    * buckets. Candidate pairs form only within probed buckets — one
+    * shuffle on the (table, bucket) key, O(n·probes) pairs tested instead
+    * of O(n²). Precision is exact (every emitted pair passed the true
+    * cosine test); recall vs the brute-force truth is pinned in DedupSpec. */
   val embeddingNearDupLsh = QueryDef(
     "q_dedup_embedding_lsh",
     (spark, dir) => {
@@ -421,20 +334,12 @@ object Dedup {
       // ad-hoc callers embedding this plan long-term should clearCache too
       val sigs = Tables(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
-          expr("sign_proj(embedding, 12)").as("sig"))
+          Lsh.signature("embedding").as("sig"))
         .persist()
-      // table-qualified bucket key: t*64 + (6-bit slice of the signature)
-      def bucket(t: Int, mask: Long) = {
-        val slice = if (t == 0) expr("sig % 64") else expr("sig div 64")
-        (lit(t * 64L) + slice.cast("long").bitwiseXOR(lit(mask))).cast("long")
-      }
-      val probeKeys = for { t <- 0 to 1; m <- probeMasks } yield bucket(t, m)
       val probes = sigs.select(col("vec_id").as("id_a"),
-        col("embedding").as("ea"),
-        explode(array(probeKeys: _*)).as("bucket"))
+        col("embedding").as("ea"), Lsh.probeBuckets)
       val cands = sigs.select(col("vec_id").as("id_b"),
-        col("embedding").as("eb"),
-        explode(array(bucket(0, 0L), bucket(1, 0L))).as("bucket"))
+        col("embedding").as("eb"), Lsh.homeBuckets)
       // cosine BEFORE dedup: the codegen kernel is ~100 flops/pair, so
       // re-scoring a pair per colliding probe is cheap, while dedup-first
       // shuffles every candidate row WITH both 64-float embedding columns;
@@ -447,30 +352,24 @@ object Dedup {
         .select(col("id_a"), col("id_b"), col("cos"))
         .dropDuplicates("id_a", "id_b")
     },
-    Some {
-      val duckProbeKeys = (for { t <- 0 to 1; m <- probeMasks } yield {
-        val slice = if (t == 0) "sig % 64" else "sig // 64"
-        s"${t * 64} + xor($slice, $m)"
-      }).mkString(", ")
-      s"""
+    Some(s"""
       WITH sigs AS (
-        SELECT vec_id, embedding, ${Similarity.duckSig("embedding", 12)} AS sig
+        SELECT vec_id, embedding, ${Lsh.duckSignature("embedding")} AS sig
         FROM embeddings),
       probes AS (
         SELECT vec_id AS id_a, embedding AS ea,
-               unnest([$duckProbeKeys]) AS bucket
+               ${Lsh.duckProbeBuckets} AS bucket
         FROM sigs),
       cands AS (
         SELECT vec_id AS id_b, embedding AS eb,
-               unnest([0 + sig % 64, 64 + sig // 64]) AS bucket
+               ${Lsh.duckHomeBuckets} AS bucket
         FROM sigs)
       SELECT id_a, id_b, cos FROM (
         SELECT DISTINCT p.id_a, c.id_b,
                ${duckCosine("p.ea", "c.eb")} AS cos
         FROM probes p JOIN cands c ON p.bucket = c.bucket
         WHERE p.id_a < c.id_b)
-      WHERE cos > 0.45"""
-    })
+      WHERE cos > 0.45"""))
 
   /** Embedding-cosine near-dup pairs, brute force over the bounded fixture —
     * the correctness BASELINE for [[embeddingNearDupLsh]] (all-pairs cross
@@ -700,26 +599,6 @@ object Dedup {
       FROM (SELECT doc, min(r) AS cluster_id FROM reach GROUP BY doc)
       GROUP BY cluster_id"""))
 
-  /** (doc_id, sig, band_id, band_hash) LSH band index of a document frame —
-    * the join side of every MinHash lookup. In a production deployment this
-    * is a PERSISTED table for the corpus (recomputing 100 TB of signatures
-    * per increment defeats the point); here it is derived on the fly so the
-    * join shape — the part that matters — is exercised end-to-end. */
-  private def bandIndex(
-      docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
-      hashes: Int, bands: Int): org.apache.spark.sql.DataFrame = {
-    val rows = hashes / bands
-    docs
-      .select(col(idCol).as("doc_id"),
-        shingles(toks(col(textCol))).as("grams"))
-      .select(col("doc_id"), expr(s"minhash_sig(grams, $hashes)").as("sig"))
-      .select(col("doc_id"), col("sig"), posexplode(
-        array((0 until bands).map(bnd => xxhash64(
-          (lit(bnd) +: (0 until rows).map(j =>
-            element_at(col("sig"), bnd * rows + j + 1))): _*)): _*))
-        .as(Seq("band_id", "band_hash")))
-  }
-
   /** Library API: exact-dedup admission of a new batch against an already
     * deduplicated corpus — the steady-state shape of pipeline dedup. At
     * 100 TB the corpus is curated ONCE; every increment must dedup (a)
@@ -745,7 +624,9 @@ object Dedup {
 
   /** Library API: full incremental admission — [[exactAdmit]] plus a
     * MinHash-LSH near-dup check of the surviving batch docs against the
-    * corpus band index. Candidate pairs form only between BATCH and CORPUS
+    * corpus band index (the bands of [[minHashNearDup]]; in a production
+    * deployment the corpus side is a PERSISTED table, here it is derived on
+    * the fly). Candidate pairs form only between BATCH and CORPUS
     * rows sharing a band bucket (never corpus×corpus — that work was paid
     * once when the corpus was curated); with a small increment AQE
     * broadcasts the batch band table and the corpus index never shuffles.
@@ -758,13 +639,11 @@ object Dedup {
       : org.apache.spark.sql.DataFrame = {
     require(hashes % bands == 0, s"bands ($bands) must divide hashes ($hashes)")
     val fresh = exactAdmit(corpus, batch, idCol, textCol)
-    val nearHits = bandIndex(fresh, idCol, textCol, hashes, bands).as("x")
-      .join(bandIndex(corpus, idCol, textCol, hashes, bands).as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_hash") === col("y.band_hash"))
-      .filter(aggregate(zip_with(col("x.sig"), col("y.sig"),
-        (p, q) => when(p === q, 1).otherwise(0)), lit(0), _ + _)
-        .cast("double") / hashes.toDouble >= threshold)
+    def index(df: org.apache.spark.sql.DataFrame) = Lsh.banded(
+      minhashSigs(df, idCol, textCol, hashes), hashes, bands, Lsh.hashKey)
+    val nearHits = index(fresh).as("x")
+      .join(index(corpus).as("y"), Lsh.sameBucket(Lsh.hashKey))
+      .filter(Lsh.agreement(col("x.sig"), col("y.sig"), hashes) >= threshold)
       .select(col("x.doc_id").as(idCol)).distinct()
     fresh.join(nearHits, Seq(idCol), "left_anti")
   }
@@ -1053,10 +932,10 @@ object Dedup {
   /** Library API: SEMANTIC decontamination — flag eval/benchmark items
     * whose EMBEDDING is near-duplicate to some training item (the
     * contamination n-gram overlap misses: paraphrases, translations,
-    * formatting changes). Same two-table 6-bit sign-projection LSH as
+    * formatting changes). Same sign-projection index ([[Lsh]]) as
     * [[embeddingNearDupLsh]], asymmetric: the (small) eval side fans out to
-    * all 2×22 hamming≤2 probe buckets, the (huge) train side lands in just
-    * its 2 home buckets — so the corpus-sized explode is 2×, not 44×, and
+    * all 44 probe buckets, the (huge) train side lands in just its 2 home
+    * buckets — so the corpus-sized explode is 2×, not 44×, and
     * candidates form only inside probed buckets (one shuffle on the bucket
     * key, never eval×train). Returns each contaminated eval item's BEST
     * training match (max cosine, smallest train id on ties). */
@@ -1068,18 +947,11 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     def withSig(df: org.apache.spark.sql.DataFrame, a: String, e: String) =
       df.select(col(idCol).as(a), col(embCol).as(e),
-        expr(s"sign_proj($embCol, 12)").as("sig"))
-    def bucket(t: Int, mask: Long) = {
-      val slice = if (t == 0) expr("sig % 64") else expr("sig div 64")
-      (lit(t * 64L) + slice.cast("long").bitwiseXOR(lit(mask))).cast("long")
-    }
-    val probeKeys = for { t <- 0 to 1; m <- probeMasks } yield bucket(t, m)
+        Lsh.signature(embCol).as("sig"))
     val probes = withSig(eval, "eval_id", "ea")
-      .select(col("eval_id"), col("ea"),
-        explode(array(probeKeys: _*)).as("bucket"))
+      .select(col("eval_id"), col("ea"), Lsh.probeBuckets)
     val cands = withSig(train, "train_id", "eb")
-      .select(col("train_id"), col("eb"),
-        explode(array(bucket(0, 0L), bucket(1, 0L))).as("bucket"))
+      .select(col("train_id"), col("eb"), Lsh.homeBuckets)
     probes.join(cands, "bucket")
       .withColumn("cos", expr("cosine_sim(ea, eb)"))
       .filter(col("cos") >= tau)
@@ -1104,25 +976,20 @@ object Dedup {
         train = e.filter(col("label") =!= 0),
         eval = e.filter(col("label") === 0))
     },
-    Some {
-      val duckProbeKeys = (for { t <- 0 to 1; m <- probeMasks } yield {
-        val slice = if (t == 0) "sig % 64" else "sig // 64"
-        s"${t * 64} + xor($slice, $m)"
-      }).mkString(", ")
-      s"""
+    Some(s"""
       WITH ev AS (
-        SELECT vec_id, embedding, ${Similarity.duckSig("embedding", 12)} AS sig
+        SELECT vec_id, embedding, ${Lsh.duckSignature("embedding")} AS sig
         FROM embeddings WHERE label = 0),
       tr AS (
-        SELECT vec_id, embedding, ${Similarity.duckSig("embedding", 12)} AS sig
+        SELECT vec_id, embedding, ${Lsh.duckSignature("embedding")} AS sig
         FROM embeddings WHERE label <> 0),
       probes AS (
         SELECT vec_id AS eval_id, embedding AS ea,
-               unnest([$duckProbeKeys]) AS bucket
+               ${Lsh.duckProbeBuckets} AS bucket
         FROM ev),
       cands AS (
         SELECT vec_id AS train_id, embedding AS eb,
-               unnest([0 + sig % 64, 64 + sig // 64]) AS bucket
+               ${Lsh.duckHomeBuckets} AS bucket
         FROM tr),
       hits AS (
         SELECT DISTINCT p.eval_id, c.train_id,
@@ -1133,8 +1000,7 @@ object Dedup {
                row_number() OVER (PARTITION BY eval_id
                                   ORDER BY cos DESC, train_id) AS rk
         FROM hits WHERE cos >= 0.4)
-      SELECT eval_id, train_id, cos FROM ranked WHERE rk = 1"""
-    })
+      SELECT eval_id, train_id, cos FROM ranked WHERE rk = 1"""))
 
   /** Library API: canonical-copy selection — dedup that keeps the BEST
     * copy per duplicate group instead of the first. Real pipelines rank

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Link-graph analytics over document collections — pretraining pipelines
@@ -72,31 +72,24 @@ object Graphs {
       .select(col("node"), expr(rankSql).as("rank_u"))
   }
 
-  /** PageRank quality prior over the corpus link graph: each document
-    * carries two md5-derived out-links (a deterministic stand-in for the
-    * page→page edges a crawl provides), five integer iterations, top-20
-    * pages by rank. The oracle unrolls the identical five rounds in
-    * DuckDB — every micro-rank unit must match. */
-  val pagerank = QueryDef(
-    "q_graph_pagerank",
-    (spark, dir) => {
-      val docs = Tables(spark, dir, "documents")
-      val n = docs.agg(count(lit(1)).as("n_docs"))
-      val links = docs.crossJoin(broadcast(n)).select(col("doc_id"),
-        expr("CAST(conv(substr(md5(text), 20, 4), 16, 10) AS BIGINT) " +
-          "% n_docs").as("dst1"),
-        expr("CAST(conv(substr(md5(text), 24, 4), 16, 10) AS BIGINT) " +
-          "% n_docs").as("dst2"))
-      val edges = links.select(col("doc_id").as("src"),
-          col("dst1").as("dst"))
-        .unionAll(links.select(col("doc_id").as("src"),
-          col("dst2").as("dst")))
-      pageRankInt(edges, "src", "dst", iters = 5)
-        .orderBy(col("rank_u").desc, col("node"))
-        .limit(20)
-        .select(col("node"), col("rank_u"))
-    },
-    Some("""
+  /** The corpus link graph as (src, dst) edges: each document carries two
+    * md5-derived out-links (a deterministic stand-in for the page→page
+    * edges a crawl provides), to documents `md5 slice % n_docs`. */
+  private def linkEdges(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables(spark, dir, "documents")
+    val n = docs.agg(count(lit(1)).as("n_docs"))
+    val links = docs.crossJoin(broadcast(n)).select(col("doc_id"),
+      expr("CAST(conv(substr(md5(text), 20, 4), 16, 10) AS BIGINT) " +
+        "% n_docs").as("dst1"),
+      expr("CAST(conv(substr(md5(text), 24, 4), 16, 10) AS BIGINT) " +
+        "% n_docs").as("dst2"))
+    links.select(col("doc_id").as("src"), col("dst1").as("dst"))
+      .unionAll(links.select(col("doc_id").as("src"), col("dst2").as("dst")))
+  }
+
+  /** DuckDB twin of [[linkEdges]]: the head of an oracle's WITH clause,
+    * CTEs `lk` (links) and `e0` (edges), ending in a comma. */
+  private val duckLinkEdges = """
       WITH lk AS (
         SELECT doc_id AS src,
                ('0x' || substr(md5(text), 20, 4))::BIGINT
@@ -107,7 +100,19 @@ object Graphs {
       e0 AS (
         SELECT src, dst1 AS dst FROM lk
         UNION ALL
-        SELECT src, dst2 FROM lk),
+        SELECT src, dst2 FROM lk),"""
+
+  /** PageRank quality prior over the corpus link graph ([[linkEdges]]):
+    * five integer iterations, top-20 pages by rank. The oracle unrolls the
+    * identical five rounds in DuckDB — every micro-rank unit must match. */
+  val pagerank = QueryDef(
+    "q_graph_pagerank",
+    (spark, dir) =>
+      pageRankInt(linkEdges(spark, dir), "src", "dst", iters = 5)
+        .orderBy(col("rank_u").desc, col("node"))
+        .limit(20)
+        .select(col("node"), col("rank_u")),
+    Some(duckLinkEdges + """
       deg AS (SELECT src, count(*) AS d FROM e0 GROUP BY src),
       e AS (SELECT e0.src, e0.dst, deg.d FROM e0 JOIN deg USING (src)),
       n AS (
@@ -195,34 +200,11 @@ object Graphs {
     * the identical four rounds in DuckDB. */
   val kcore = QueryDef(
     "q_graph_kcore",
-    (spark, dir) => {
-      val docs = Tables(spark, dir, "documents")
-      val n = docs.agg(count(lit(1)).as("n_docs"))
-      val links = docs.crossJoin(broadcast(n)).select(col("doc_id"),
-        expr("CAST(conv(substr(md5(text), 20, 4), 16, 10) AS BIGINT) " +
-          "% n_docs").as("dst1"),
-        expr("CAST(conv(substr(md5(text), 24, 4), 16, 10) AS BIGINT) " +
-          "% n_docs").as("dst2"))
-      val edges = links.select(col("doc_id").as("src"),
-          col("dst1").as("dst"))
-        .unionAll(links.select(col("doc_id").as("src"),
-          col("dst2").as("dst")))
-      kCore(edges, "src", "dst", k = 3, rounds = 4)
+    (spark, dir) =>
+      kCore(linkEdges(spark, dir), "src", "dst", k = 3, rounds = 4)
         .orderBy(col("deg").desc, col("node"))
-        .limit(25)
-    },
-    Some("""
-      WITH lk AS (
-        SELECT doc_id AS src,
-               ('0x' || substr(md5(text), 20, 4))::BIGINT
-                 % (SELECT count(*) FROM documents) AS dst1,
-               ('0x' || substr(md5(text), 24, 4))::BIGINT
-                 % (SELECT count(*) FROM documents) AS dst2
-        FROM documents),
-      e0 AS (
-        SELECT src, dst1 AS dst FROM lk
-        UNION ALL
-        SELECT src, dst2 FROM lk),
+        .limit(25),
+    Some(duckLinkEdges + """
       ud0 AS (
         SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
         FROM e0 WHERE src <> dst),
@@ -331,34 +313,11 @@ object Graphs {
     * exact counts, no tolerance. */
   val triangles = QueryDef(
     "q_graph_triangles",
-    (spark, dir) => {
-      val docs = Tables(spark, dir, "documents")
-      val n = docs.agg(count(lit(1)).as("n_docs"))
-      val links = docs.crossJoin(broadcast(n)).select(col("doc_id"),
-        expr("CAST(conv(substr(md5(text), 20, 4), 16, 10) AS BIGINT) " +
-          "% n_docs").as("dst1"),
-        expr("CAST(conv(substr(md5(text), 24, 4), 16, 10) AS BIGINT) " +
-          "% n_docs").as("dst2"))
-      val edges = links.select(col("doc_id").as("src"),
-          col("dst1").as("dst"))
-        .unionAll(links.select(col("doc_id").as("src"),
-          col("dst2").as("dst")))
-      triangleCounts(edges, "src", "dst")
+    (spark, dir) =>
+      triangleCounts(linkEdges(spark, dir), "src", "dst")
         .orderBy(col("n_tri").desc, col("node"))
-        .limit(15)
-    },
-    Some("""
-      WITH lk AS (
-        SELECT doc_id AS src,
-               ('0x' || substr(md5(text), 20, 4))::BIGINT
-                 % (SELECT count(*) FROM documents) AS dst1,
-               ('0x' || substr(md5(text), 24, 4))::BIGINT
-                 % (SELECT count(*) FROM documents) AS dst2
-        FROM documents),
-      e0 AS (
-        SELECT src, dst1 AS dst FROM lk
-        UNION ALL
-        SELECT src, dst2 FROM lk),
+        .limit(15),
+    Some(duckLinkEdges + """
       ud AS (
         SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
         FROM e0 WHERE src <> dst),
@@ -435,37 +394,16 @@ object Graphs {
     "q_graph_label_prop",
     (spark, dir) => {
       val docs = Tables(spark, dir, "documents")
-      val n = docs.agg(count(lit(1)).as("n_docs"))
-      val links = docs.crossJoin(broadcast(n)).select(col("doc_id"),
-        expr("CAST(conv(substr(md5(text), 20, 4), 16, 10) AS BIGINT) " +
-          "% n_docs").as("dst1"),
-        expr("CAST(conv(substr(md5(text), 24, 4), 16, 10) AS BIGINT) " +
-          "% n_docs").as("dst2"))
-      val edges = links.select(col("doc_id").as("src"),
-          col("dst1").as("dst"))
-        .unionAll(links.select(col("doc_id").as("src"),
-          col("dst2").as("dst")))
       val seeds = docs.filter(col("doc_id") % 20 === 0)
         .select(col("doc_id").as("node"), (col("doc_id") % 3).as("label"))
-      val labeled = labelPropagate(edges, "src", "dst",
+      val labeled = labelPropagate(linkEdges(spark, dir), "src", "dst",
         seeds, "node", "label", rounds = 3)
       docs.select(col("doc_id").as("node"))
         .join(labeled, Seq("node"), "left")
         .groupBy(coalesce(col("label"), lit(-1L)).as("label"))
         .agg(count(lit(1)).as("n_nodes"))
     },
-    Some("""
-      WITH lk AS (
-        SELECT doc_id AS src,
-               ('0x' || substr(md5(text), 20, 4))::BIGINT
-                 % (SELECT count(*) FROM documents) AS dst1,
-               ('0x' || substr(md5(text), 24, 4))::BIGINT
-                 % (SELECT count(*) FROM documents) AS dst2
-        FROM documents),
-      e0 AS (
-        SELECT src, dst1 AS dst FROM lk
-        UNION ALL
-        SELECT src, dst2 FROM lk),
+    Some(duckLinkEdges + """
       e AS (
         SELECT src, dst FROM e0
         UNION ALL

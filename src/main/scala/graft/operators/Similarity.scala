@@ -12,40 +12,17 @@ import org.apache.spark.sql.functions._
   *  - brute-force cosine top-k: the correctness baseline. Query set ×
   *    candidate set cross join; at scale the query set is the broadcast side
   *    and candidates stream, so cost is linear in corpus size.
-  *  - LSH-bucketed ANN: 6 sign-random-projection bits → 64 buckets;
-  *    multi-probe (exact bucket + all hamming-1 neighbors) then exact re-rank
-  *    inside probed buckets. The 100 TB shape: candidates shuffle once on
-  *    bucket id; probe fan-out is per-query, not per-candidate. Hyperplanes
-  *    are derived from pure integer arithmetic so the DuckDB oracle can
-  *    reproduce them bit-for-bit (no engine-specific RNG).
+  *  - LSH-bucketed ANN over the sign-projection index of [[Lsh]]: two
+  *    6-bit tables, multi-probe at hamming ≤ 2 (22 buckets per table), then
+  *    exact re-rank inside probed buckets. The 100 TB shape: candidates
+  *    shuffle once on bucket id; probe fan-out is per-query, not
+  *    per-candidate. Hyperplanes are derived from pure integer arithmetic
+  *    so the DuckDB oracle can reproduce them bit-for-bit (no
+  *    engine-specific RNG).
   *
   * Both use the native codegen'd cosine (graft.functions.CosineSim).
   */
 object Similarity {
-
-  private val nBits = 6
-  private val P1 = graft.functions.SignProjection.P1
-  private val P2 = graft.functions.SignProjection.P2
-
-  // Bucketing uses the native codegen'd SignProjection kernel (one
-  // JIT-compiled nBits×dims loop per row; replaced the interpreted
-  // aggregate(transform(sequence…)) lambda chain — VERDICT r2 perf #3).
-  // Hyperplanes h(i,j) = ((i·P1 XOR j·P2) mod 2001 − 1000)/1000: pure
-  // integer arithmetic, reproducible in any engine (see SignProjection's
-  // scaladoc for why the mix is XOR, not addition).
-
-  private def duckDot(i: Int, emb: String): String =
-    s"""list_reduce(list_transform(range(len($emb)),
-        j -> CAST($emb[j+1] AS DOUBLE) *
-             (CAST(xor(${i * P1}, j * $P2) % 2001 - 1000 AS DOUBLE)
-              / 1000.0)),
-        (p, q) -> p + q)"""
-
-  /** DuckDB mirror of sign_proj(emb, bits) — identical integer hyperplanes. */
-  private[operators] def duckSig(emb: String, bits: Int = nBits): String =
-    (0 until bits)
-      .map(i => s"(CASE WHEN ${duckDot(i, emb)} > 0.0 THEN ${1 << i} ELSE 0 END)")
-      .mkString("(", " + ", ")")
 
   /** Query set: first 8 vectors; candidates: the rest. */
   private def split(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
@@ -81,61 +58,40 @@ object Similarity {
           WHERE q.vec_id < 8 AND c.vec_id >= 8))
       WHERE rn <= 10""")).copy(parityShape = true)
 
-  /** Multi-probe LSH ANN: a 12-bit sign projection split into two
-    * independent 6-bit hash tables (OR-construction — a candidate is
-    * examined if it collides with the query in EITHER table), each probed
-    * at hamming≤2 (22 buckets/table; probe fan-out is per-QUERY, so
-    * widening costs nothing per candidate), exact cosine re-rank inside
-    * probed buckets. Same index shape as the dedup scale path
-    * (Dedup.embeddingNearDupLsh); recall@10 vs brute force is pinned in
-    * SimilaritySpec. */
-  val lshAnn = QueryDef(
-    "q_sim_ann_lsh",
-    (spark, dir) => {
-      val (q, c) = split(spark, dir)
-      def bucket(t: Int, mask: Long) = {
-        val slice = if (t == 0) expr("sig % 64") else expr("sig div 64")
-        (lit(t * 64L) + slice.cast("long").bitwiseXOR(lit(mask)))
-          .cast("long")
-      }
-      val cands = c.select(col("vec_id").as("cand_id"),
-        col("embedding").as("ec"),
-        expr(s"sign_proj(embedding, 12)").as("sig"))
-        .select(col("cand_id"), col("ec"),
-          explode(array(bucket(0, 0L), bucket(1, 0L))).as("bucket"))
-      val probeKeys =
-        for { t <- 0 to 1; m <- Dedup.probeMasks } yield bucket(t, m)
-      val probes = q.select(col("vec_id").as("query_id"),
-        col("embedding").as("eq"),
-        expr(s"sign_proj(embedding, 12)").as("sig"))
-        .select(col("query_id"), col("eq"),
-          explode(array(probeKeys: _*)).as("bucket"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("cand_id"))
-      broadcast(probes).join(cands, "bucket")
-        .dropDuplicates("query_id", "cand_id")
-        .withColumn("cos", expr("cosine_sim(eq, ec)"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 10)
-        .select(col("query_id"), col("cand_id"), col("cos"), col("rn"))
-    },
-    Some {
-      val duckProbeKeys = (for { t <- 0 to 1; m <- Dedup.probeMasks } yield {
-        val slice = if (t == 0) "sig % 64" else "sig // 64"
-        s"${t * 64} + xor($slice, $m)"
-      }).mkString(", ")
-      s"""
+  /** Every query's LSH candidates ranked by exact cosine: (query_id,
+    * cand_id, eq, ec, cos, rn), rn = 1 nearest. The queries probe their 44
+    * buckets of [[Lsh]]'s sign-projection index (broadcast), the candidates
+    * land in their 2 home buckets (one shuffle on bucket id), and each
+    * probed (query, candidate) pair is scored once. */
+  private def lshRanked(spark: SparkSession, dir: String): DataFrame = {
+    val (q, c) = split(spark, dir)
+    val cands = c.select(col("vec_id").as("cand_id"),
+      col("embedding").as("ec"), Lsh.signature("embedding").as("sig"))
+      .select(col("cand_id"), col("ec"), Lsh.homeBuckets)
+    val probes = q.select(col("vec_id").as("query_id"),
+      col("embedding").as("eq"), Lsh.signature("embedding").as("sig"))
+      .select(col("query_id"), col("eq"), Lsh.probeBuckets)
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("cand_id"))
+    broadcast(probes).join(cands, "bucket")
+      .dropDuplicates("query_id", "cand_id")
+      .withColumn("cos", expr("cosine_sim(eq, ec)"))
+      .withColumn("rn", row_number().over(w).cast("long"))
+  }
+
+  /** DuckDB twin of [[lshRanked]] (without the embedding columns). */
+  private def lshRankedSql: String = s"""
       WITH cands AS (
-        SELECT cand_id, ec, unnest([0 + sig % 64, 64 + sig // 64]) AS bucket
+        SELECT cand_id, ec, ${Lsh.duckHomeBuckets} AS bucket
         FROM (SELECT vec_id AS cand_id, embedding AS ec,
-                     ${duckSig("embedding", 12)} AS sig
+                     ${Lsh.duckSignature("embedding")} AS sig
               FROM embeddings WHERE vec_id >= 8)),
       qsig AS (
         SELECT vec_id AS query_id, embedding AS eq,
-               ${duckSig("embedding", 12)} AS sig
+               ${Lsh.duckSignature("embedding")} AS sig
         FROM embeddings WHERE vec_id < 8),
       probes AS (
-        SELECT query_id, eq, unnest([$duckProbeKeys]) AS bucket
+        SELECT query_id, eq, ${Lsh.duckProbeBuckets} AS bucket
         FROM qsig),
       pairs AS (
         SELECT DISTINCT p.query_id, c.cand_id
@@ -148,9 +104,23 @@ object Similarity {
                           DESC, pr.cand_id) AS BIGINT) AS rn
         FROM pairs pr
         JOIN embeddings q ON q.vec_id = pr.query_id
-        JOIN embeddings e ON e.vec_id = pr.cand_id)
-      WHERE rn <= 10"""
-    })
+        JOIN embeddings e ON e.vec_id = pr.cand_id)"""
+
+  /** Multi-probe LSH ANN: a 12-bit sign projection split into two
+    * independent 6-bit hash tables (OR-construction — a candidate is
+    * examined if it collides with the query in EITHER table), each probed
+    * at hamming≤2 (22 buckets/table; probe fan-out is per-QUERY, so
+    * widening costs nothing per candidate), exact cosine re-rank inside
+    * probed buckets. The index is [[Lsh]]'s, shared with the dedup scale
+    * path (Dedup.embeddingNearDupLsh); recall@10 vs brute force is pinned
+    * in SimilaritySpec. */
+  val lshAnn = QueryDef(
+    "q_sim_ann_lsh",
+    (spark, dir) => lshRanked(spark, dir)
+      .filter(col("rn") <= 10)
+      .select(col("query_id"), col("cand_id"), col("cos"), col("rn")),
+    Some(s"""$lshRankedSql
+      WHERE rn <= 10"""))
 
   /** IVF (inverted-file) ANN — the second scale path the pipeline brief
     * names besides LSH. Build: every candidate is assigned to its nearest
@@ -532,66 +502,11 @@ object Similarity {
     * when the negative pool is the full 100 TB corpus. */
   val hardNegatives = QueryDef(
     "q_sim_hard_negatives",
-    (spark, dir) => {
-      val (q, c) = split(spark, dir)
-      def bucket(t: Int, mask: Long) = {
-        val slice = if (t == 0) expr("sig % 64") else expr("sig div 64")
-        (lit(t * 64L) + slice.cast("long").bitwiseXOR(lit(mask)))
-          .cast("long")
-      }
-      val cands = c.select(col("vec_id").as("cand_id"),
-        col("embedding").as("ec"),
-        expr(s"sign_proj(embedding, 12)").as("sig"))
-        .select(col("cand_id"), col("ec"),
-          explode(array(bucket(0, 0L), bucket(1, 0L))).as("bucket"))
-      val probeKeys =
-        for { t <- 0 to 1; m <- Dedup.probeMasks } yield bucket(t, m)
-      val anchors = q.select(col("vec_id").as("query_id"),
-        col("embedding").as("eq"),
-        expr(s"sign_proj(embedding, 12)").as("sig"))
-        .select(col("query_id"), col("eq"),
-          explode(array(probeKeys: _*)).as("bucket"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("cand_id"))
-      broadcast(anchors).join(cands, "bucket")
-        .dropDuplicates("query_id", "cand_id")
-        .withColumn("cos", expr("cosine_sim(eq, ec)"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn").between(2, 6))
-        .select(col("query_id"), col("cand_id"), col("cos"), col("rn"))
-    },
-    Some {
-      val duckProbeKeys = (for { t <- 0 to 1; m <- Dedup.probeMasks } yield {
-        val slice = if (t == 0) "sig % 64" else "sig // 64"
-        s"${t * 64} + xor($slice, $m)"
-      }).mkString(", ")
-      s"""
-      WITH cands AS (
-        SELECT cand_id, ec, unnest([0 + sig % 64, 64 + sig // 64]) AS bucket
-        FROM (SELECT vec_id AS cand_id, embedding AS ec,
-                     ${duckSig("embedding", 12)} AS sig
-              FROM embeddings WHERE vec_id >= 8)),
-      qsig AS (
-        SELECT vec_id AS query_id, embedding AS eq,
-               ${duckSig("embedding", 12)} AS sig
-        FROM embeddings WHERE vec_id < 8),
-      probes AS (
-        SELECT query_id, eq, unnest([$duckProbeKeys]) AS bucket
-        FROM qsig),
-      pairs AS (
-        SELECT DISTINCT p.query_id, c.cand_id
-        FROM probes p JOIN cands c ON p.bucket = c.bucket)
-      SELECT query_id, cand_id, cos, rn FROM (
-        SELECT pr.query_id, pr.cand_id,
-               ${Dedup.duckCosine("q.embedding", "e.embedding")} AS cos,
-               CAST(row_number() OVER (PARTITION BY pr.query_id
-                 ORDER BY ${Dedup.duckCosine("q.embedding", "e.embedding")}
-                          DESC, pr.cand_id) AS BIGINT) AS rn
-        FROM pairs pr
-        JOIN embeddings q ON q.vec_id = pr.query_id
-        JOIN embeddings e ON e.vec_id = pr.cand_id)
-      WHERE rn BETWEEN 2 AND 6"""
-    })
+    (spark, dir) => lshRanked(spark, dir)
+      .filter(col("rn").between(2, 6))
+      .select(col("query_id"), col("cand_id"), col("cos"), col("rn")),
+    Some(s"""$lshRankedSql
+      WHERE rn BETWEEN 2 AND 6"""))
 
   val all: Seq[QueryDef] = Seq(bruteForceTopK, lshAnn, ivfAnn, dotTopK,
     planTopK, quantizedTopK, pqAnn, matryoshka, hardNegatives)

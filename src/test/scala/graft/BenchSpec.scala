@@ -19,6 +19,18 @@ class BenchSpec extends GraftSpecBase {
     assert(computed.value == 3)
   }
 
+  test("release drops the localCheckpoint blocks clearCache leaves behind") {
+    val s = spark; import s.implicits._
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 0L))
+      .toDF("src", "dst")
+    operators.Graphs.kCore(edges, "src", "dst", k = 2, rounds = 2).collect()
+    spark.catalog.clearCache()
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
+      "kCore's round checkpoints should outlive clearCache")
+    Bench.release(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
   test("a row with no successful iteration times as None") {
     assert(Bench.minOf3(spark, "always_fails")(
       throw new IllegalStateException("planted failure")).isEmpty)

@@ -45,6 +45,36 @@ class DedupSpec extends GraftSpecBase {
     assert(overlap.nonEmpty, "simhash pairs disjoint from jaccard truth")
   }
 
+  test("simhash chunk buckets are exact for hamming <= 3 (kernel and " +
+      "arithmetic fingerprints)") {
+    val docs = Tables(spark, sfDir, "documents")
+    type Pairs = (org.apache.spark.sql.DataFrame, String, String, Int) =>
+      org.apache.spark.sql.DataFrame
+    val paths: Seq[(String, org.apache.spark.sql.DataFrame, Pairs)] = Seq(
+      ("kernel", operators.Dedup.simhashSigs(docs, "doc_id", "text"),
+        operators.Dedup.simHashNearDup),
+      ("arithmetic", operators.Dedup.simhashArithSigs(docs, "doc_id", "text"),
+        operators.Dedup.simHashNearDupArith))
+    paths.foreach { case (name, sigs, pairs) =>
+      val fp = sigs.filter(col("simhash").isNotNull).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      assert(fp.length >= 500, s"$name: ${fp.length} fingerprints")
+      // every unordered pair of the same fingerprints, by brute force
+      val all = for {
+        (a, fa) <- fp; (b, fb) <- fp if a < b
+      } yield (a, b, java.lang.Long.bitCount(fa ^ fb).toLong)
+      (0 to 3).foreach { k =>
+        val want = all.filter(_._3 <= k).toSet
+        val got = pairs(docs, "doc_id", "text", k).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        assert(got == want, s"$name, hamming <= $k: missing " +
+          s"${(want -- got).take(5)}, extra ${(got -- want).take(5)}")
+        if (k == 3) assert(want.nonEmpty, s"$name: no pair within hamming 3")
+      }
+    }
+    spark.catalog.clearCache()
+  }
+
   test("exact dedup counts are consistent") {
     val r = operators.Dedup.exact.run(spark, sfDir).head
     val nUnique = r.getAs[Long]("n_unique")

@@ -49,9 +49,13 @@ class PlanStabilitySpec extends GraftSpecBase {
   // broadcast-side pick flipped once in a full-suite run while passing
   // in isolation before and after (r11). Values stay oracle-checked
   // via its CORRECTNESS row; only the plan PIN is non-reproducible.
+  // The LSH rows outside the headline and heavy sets (SimHash chunk join,
+  // sign-projection hard negatives and semantic decontamination) come last,
+  // so the earlier rows keep their suite order.
   private val pinned =
     (PlanDump.headline ++ ScaleBench.heavy ++
-      Verbatim.all.flatMap(_.all.map(_.name)))
+      Verbatim.all.flatMap(_.all.map(_.name)) ++
+      Seq("q_dedup_simhash", "q_sim_hard_negatives", "q_decontaminate_semantic"))
       .distinct.filterNot(Set("op_leakage_split_deduped",
         "q_tpcds_verbatim_q23b", "q_ds_above_group_avg"))
 
